@@ -114,6 +114,13 @@ def tokens(text: ColumnOrName) -> Column:
     return F.filter(F.split(F.lower(_col(text)), r"\W+"), lambda x: x != "")
 
 
+def tokens_sql(text_sql: str) -> str:
+    """SQL text of ``tokens`` over the SQL expression ``text_sql`` — the
+    same split and empty-token filter, for builders that parse one
+    string instead of paying py4j round trips per expression node."""
+    return rf"filter(split(lower({text_sql}), '\\W+'), x -> x != '')"
+
+
 def bind1(col: Column, fn) -> Column:
     """Let-binding for Catalyst expressions: evaluate ``col`` ONCE per row
     and pass it to ``fn`` as a lambda variable. HOF lambdas re-evaluate

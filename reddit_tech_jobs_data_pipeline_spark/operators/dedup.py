@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from reddit_tech_jobs_data_pipeline_spark.functions.extract import bind1, tokens
+from reddit_tech_jobs_data_pipeline_spark.functions.extract import bind1, tokens, tokens_sql
 from reddit_tech_jobs_data_pipeline_spark.functions.text import fingerprint
 
 
@@ -73,27 +73,23 @@ def shingles(text: Column | str, n: int = 3) -> Column:
 def _shingle_table(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(id, shingle) exploded pairs — the inverted-index edge list.
 
-    The token array is let-bound (bind1) so the tokenizer runs once per
-    row — a materialized ``__toks`` column plus a ``filter(k >= 1)``
-    still tokenized twice, because predicate pushdown substitutes the
-    alias and re-evaluates the tokenizer inside the pushed filter. Short
-    docs are dropped by exploding an empty array instead of filtering."""
-
-    def _sh(toks: Column) -> Column:
-        k = F.size(toks) - (n - 1)
-        return F.when(
-            k >= 1,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), k),
-                    lambda i: F.array_join(F.slice(toks, i, n), " "),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(bind1(tokens(text_col), _sh)).alias("shingle"),
+    The token array is let-bound (the bind1 pattern, written out) so the
+    tokenizer runs once per row — a materialized ``__toks`` column plus a
+    ``filter(k >= 1)`` still tokenized twice, because predicate pushdown
+    substitutes the alias and re-evaluates the tokenizer inside the
+    pushed filter. Short docs are dropped by exploding an empty array
+    instead of filtering. Built as SQL text and parsed once: through the
+    Column API the lambdas alone cost ~300 py4j round trips per call."""
+    k = f"size(toks) - {n - 1}"
+    sh = (
+        f"CASE WHEN {k} >= 1 THEN array_distinct(transform(sequence(1, {k}), "
+        f"i -> array_join(slice(toks, i, {n}), ' '))) "
+        "ELSE CAST(array() AS array<string>) END"
+    )
+    toks = tokens_sql(f"`{text_col}`")
+    return df.selectExpr(
+        f"`{id_col}` AS id",
+        f"explode(element_at(transform(array({toks}), toks -> {sh}), 1)) AS shingle",
     )
 
 
@@ -368,15 +364,19 @@ def minhash_signatures(
 
 
 def minhash_signatures_from_shingles(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
-    digest = F.md5(F.col("shingle"))
-    w1 = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
-    w2 = F.conv(F.substring(digest, 9, 8), 16, 10).cast("long")
-    hashed = sh.select("id", w1.alias("w1"), w2.alias("w2"))
-    aggs = [
-        F.min((F.col("w1") + F.lit(i) * F.col("w2")) % F.lit(_MH_PRIME)).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return hashed.groupBy("id").agg(*aggs)
+    """(id, mh_0..mh_{k-1}) from an (id, shingle) table — the hash family
+    of ``minhash_signatures``. Written as SQL text and parsed once: the k
+    min-aggregates built through the Column API cost ~110 py4j round
+    trips per hash, as one query ~15 in all, for the identical plan
+    (``spark.sql`` binds the DataFrame arguments as temporary views and
+    drops them again). Literals keep the Column API's types: ``i`` is
+    INT, the prime BIGINT."""
+    word = "CAST(conv(substring(md5(shingle), {}, 8), 16, 10) AS BIGINT)"
+    hashed = sh.selectExpr("id", f"{word.format(1)} AS w1", f"{word.format(9)} AS w2")
+    mins = ", ".join(
+        f"min((w1 + {i} * w2) % {_MH_PRIME}) AS mh_{i}" for i in range(num_hashes)
+    )
+    return sh.sparkSession.sql(f"SELECT id, {mins} FROM {{hashed}} GROUP BY id", hashed=hashed)
 
 
 def bbit_pack(sig: DataFrame, num_hashes: int = 48) -> DataFrame:
@@ -466,15 +466,12 @@ def banded_keys(sig: DataFrame, num_hashes: int = 16, bands: int = 4) -> DataFra
     assert num_hashes % bands == 0
     r = num_hashes // bands
     band_cols = [
-        F.xxhash64(F.lit(b), *[F.col(f"mh_{b * r + j}") for j in range(r)]).alias(
-            f"band_{b}"
-        )
+        f"xxhash64({b}, {', '.join(f'mh_{b * r + j}' for j in range(r))}) AS band_{b}"
         for b in range(bands)
     ]
-    banded = sig.select("id", *band_cols)
-    return banded.select(
-        "id",
-        F.explode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias("bkey"),
+    keys = ", ".join(f"band_{b}" for b in range(bands))
+    return sig.selectExpr("id", *band_cols).selectExpr(
+        "id", f"explode(array({keys})) AS bkey"
     )
 
 
@@ -487,11 +484,9 @@ def lsh_candidate_pairs(
     8-byte uniform join key (vs a 32-char digest string), so the
     self-join shuffles a quarter of the bytes and compares longs."""
     stacked = banded_keys(sig, num_hashes, bands)
-    a = stacked.select(F.col("id").alias("id_a"), "bkey")
-    b = stacked.select(F.col("id").alias("id_b"), "bkey")
-    return (
-        a.join(b, "bkey").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b").distinct()
-    )
+    a = stacked.selectExpr("id AS id_a", "bkey")
+    b = stacked.selectExpr("id AS id_b", "bkey")
+    return a.join(b, "bkey").filter("id_a < id_b").selectExpr("id_a", "id_b").distinct()
 
 
 def minhash_lsh_dedup_pairs(
@@ -539,21 +534,24 @@ def signature_agreement(
     k-sample Jaccard estimator: E[n_agree/k] = J) to candidate pairs
     (id_a, id_b). Verification needs ONLY the two signatures — never the
     shingles — which is what makes the incremental path storage-viable:
-    the persisted state per corpus doc is k longs, not its shingle set."""
-    a = sig_a.select(
-        F.col("id").alias("id_a"), *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_hashes)]
+    the persisted state per corpus doc is k longs, not its shingle set.
+    One parsed query, like minhash_signatures_from_shingles: the 2k
+    renames and the k-term sum cost ~1.9k py4j round trips per call
+    through the Column API."""
+
+    def side(x: str) -> str:
+        mh = ", ".join(f"mh_{i} AS {x}_{i}" for i in range(num_hashes))
+        return f"(SELECT id AS id_{x}, {mh} FROM {{sig_{x}}})"
+
+    agree = " + ".join(
+        f"CASE WHEN a_{i} = b_{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
     )
-    b = sig_b.select(
-        F.col("id").alias("id_b"), *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_hashes)]
-    )
-    agree = sum(
-        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", agree.alias("n_agree"))
+    return pairs.sparkSession.sql(
+        f"SELECT id_a, id_b, {agree} AS n_agree FROM {{pairs}} "
+        f"JOIN {side('a')} USING (id_a) JOIN {side('b')} USING (id_b)",
+        pairs=pairs,
+        sig_a=sig_a,
+        sig_b=sig_b,
     )
 
 
@@ -584,53 +582,50 @@ def incremental_lsh_ingest(
     n_batch_dups, is_new). Survivors (is_new) are the rows whose
     signatures a caller appends to the store — the store grows by
     survivors only, keeping every later run's join right-sized.
+
+    ``batch_sig`` feeds banding, both candidate joins and both
+    verification sides, so pass it MATERIALIZED (``localCheckpoint()``;
+    at scale, the batch's signature parquet): the caller keeps that one
+    frame for the store append too, so a batch is signed exactly once.
     """
-    # the batch signature feeds banding, both candidate joins, and both
-    # verification sides — materialize once (same pattern as the shingle
-    # table in minhash_lsh_dedup_pairs; at scale this is the batch's
-    # signature parquet, written anyway as the store-append input)
-    batch_sig = batch_sig.localCheckpoint()
     store_keys = banded_keys(store_sig, num_hashes, bands)
     batch_keys = banded_keys(batch_sig, num_hashes, bands)
 
+    # SQL-text arguments throughout: the same plan built from Column
+    # objects (aliases, literals) cost ~600 py4j round trips per batch
     cand_store = (
-        batch_keys.join(
-            store_keys.withColumnRenamed("id", "store_id"), "bkey"
-        )
-        .select(F.col("id").alias("id_a"), F.col("store_id").alias("id_b"))
+        batch_keys.join(store_keys.withColumnRenamed("id", "store_id"), "bkey")
+        .selectExpr("id AS id_a", "store_id AS id_b")
         .distinct()
     )
     store_dups = (
         signature_agreement(cand_store, batch_sig, store_sig, num_hashes)
-        .filter(F.col("n_agree") >= min_agree)
-        .groupBy(F.col("id_a").alias("id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_store_dups"),
-            F.min("id_b").alias("first_store_dup"),
-        )
+        .filter(f"n_agree >= {min_agree}")
+        .groupBy("id_a")
+        .agg(F.expr("count(1) AS n_store_dups"), F.expr("min(id_b) AS first_store_dup"))
+        .withColumnRenamed("id_a", "id")
     )
 
     cand_batch = lsh_candidate_pairs(batch_sig, num_hashes, bands)
     batch_dups = (
         signature_agreement(cand_batch, batch_sig, batch_sig, num_hashes)
-        .filter(F.col("n_agree") >= min_agree)
+        .filter(f"n_agree >= {min_agree}")
         # (id_a < id_b) from lsh_candidate_pairs: the LATER doc is the dup
-        .groupBy(F.col("id_b").alias("id"))
-        .agg(F.count(F.lit(1)).alias("n_batch_dups"))
+        .groupBy("id_b")
+        .agg(F.expr("count(1) AS n_batch_dups"))
+        .withColumnRenamed("id_b", "id")
     )
 
     return (
-        batch_sig.select("id")
+        batch_sig.selectExpr("id")
         .join(store_dups, "id", "left")
         .join(batch_dups, "id", "left")
-        .select(
+        .selectExpr(
             "id",
-            F.coalesce("n_store_dups", F.lit(0)).alias("n_store_dups"),
+            "coalesce(n_store_dups, 0) AS n_store_dups",
             "first_store_dup",
-            F.coalesce("n_batch_dups", F.lit(0)).alias("n_batch_dups"),
-            (
-                F.coalesce("n_store_dups", F.lit(0)) + F.coalesce("n_batch_dups", F.lit(0)) == 0
-            ).alias("is_new"),
+            "coalesce(n_batch_dups, 0) AS n_batch_dups",
+            "coalesce(n_store_dups, 0) + coalesce(n_batch_dups, 0) = 0 AS is_new",
         )
     )
 

@@ -73,19 +73,19 @@ def iterative_shuffle_partitions(spark: SparkSession, rows: int | None = None):
     pagerank runs 7.6 s at 32 shuffle partitions vs 4.0 s at 8 with
     identical results (bfs 3.4 s vs 2.5 s).
 
-    The count is ADAPTIVE for the SCALE modes (``commutative=True`` /
-    ``broadcast=False``): the operator materializes its edge table
-    BEFORE entering the context (the derivation is a full-data shuffle
-    that belongs at session sizing — measured at sf1.0, deriving the
-    83.4M-edge co-supply list under a pinned 8 made bfs 2.5× slower),
-    counts it (one cheap probe of the cached/checkpointed blocks), and
-    passes ``rows``; the pin becomes ``clamp(rows / 2M, 8, 2048)`` — 8
-    at test SF (the measured loop optimum), growing linearly once the
-    iterated table is big enough that a fixed 8 would spill. Measured on
-    the sf1.0 graph (SCALE.md): pagerank at the fixed 8 ran 71.7 s;
-    sized to the data it runs ~23 s. The ordered/broadcast oracle-parity
-    modes — test-SF paths by design — pass no ``rows`` and keep the
-    fixed pin with lazy cache fill, so their cost profile is unchanged.
+    The count is ADAPTIVE: every mode of bfs_min_hops and pagerank
+    (scale and oracle-parity alike) and the near-dup connected-components
+    loops materialize their edge table BEFORE entering the context (the
+    derivation is a full-data shuffle that belongs at session sizing —
+    measured at sf1.0, deriving the 83.4M-edge co-supply list under a
+    pinned 8 made bfs 2.5× slower), count it (one cheap probe of the
+    cached/checkpointed blocks), and pass ``rows``; the pin becomes
+    ``clamp(rows / 2M, 8, 2048)`` — 8 at test SF (the measured loop
+    optimum), growing linearly once the iterated table is big enough
+    that a fixed 8 would spill. Measured on the sf1.0 graph (SCALE.md):
+    pagerank at the fixed 8 ran 71.7 s; sized to the data it runs
+    ~23 s. Callers that pass no ``rows`` (sssp_min_dist, kcore) get the
+    fixed pin of 8.
     SPARK_GRAFT_ITER_PARTITIONS overrides everything (the
     partition-invariance sweep uses it to prove results don't depend on
     this knob)."""

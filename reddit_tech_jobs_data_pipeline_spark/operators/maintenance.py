@@ -42,6 +42,26 @@ def table_file_sizes(spark: SparkSession, path: str) -> list[int]:
     return sizes
 
 
+def _scan_bytes(df: DataFrame) -> int:
+    """Bytes of a file-source read: its relation's ``sizeInBytes``, the
+    sum of the file index's leaf-file lengths (``_``/``.`` names
+    skipped, as in table_file_sizes). No job and a constant few py4j
+    calls, where table_file_sizes walks ``listFiles`` one round trip at
+    a time (~1 s for a 100-file store)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _glob_count(spark: SparkSession, pattern: str) -> int:
+    """Number of paths matching a Hadoop glob: one ``globStatus`` call, a
+    constant few py4j round trips and no job, where a Python walk over
+    ``listStatus``/``listFiles`` pays round trips per entry and counting
+    through a Spark read lists the partition dirs in a job once there
+    are more than 32. Like ``spark.read.parquet``, it reads glob
+    characters in the base path as a pattern."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(pattern)
+    return len(p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p))
+
+
 def partition_dirs(spark: SparkSession, path: str) -> list[str]:
     """Names of the Hive-style partition columns (``col=value`` top-level
     subdirectories) under ``path``; empty for a flat table. Uses the JVM
@@ -63,28 +83,6 @@ def partition_dirs(spark: SparkSession, path: str) -> list[str]:
     return sorted(cols)
 
 
-def partition_values(spark: SparkSession, path: str, col: str) -> list[str]:
-    """The distinct values of Hive-style partition column ``col`` under
-    ``path``, read from the DIRECTORY NAMES (``col=value``) — the same
-    metadata Spark's partition discovery uses, at FS-listing cost
-    instead of a Spark job. ``compact(partition_col=...)`` sizes its
-    rewrite from this: the former ``select(col).distinct().count()``
-    launched a full scan-shaped job per compaction call, which inside a
-    streaming maintenance cadence is one extra job per compaction for a
-    number the directory listing already knows (r15, guide §1.2)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    vals: list[str] = []
-    prefix = col + "="
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
-            vals.append(name[len(prefix):])
-    return sorted(vals)
-
-
 def compact(
     spark: SparkSession,
     path: str,
@@ -103,17 +101,18 @@ def compact(
     recover_interrupted_swap, which runs first here so a rerun after a
     mid-swap crash self-heals instead of failing the read."""
     recover_interrupted_swap(spark, path)
-    current = sum(table_file_sizes(spark, path))
-    n_out = max(1, math.ceil(current / target_bytes))
     df = spark.read.parquet(path)
+    current = _scan_bytes(df)
+    n_out = max(1, math.ceil(current / target_bytes))
     staging = _staging_path(path)
     if partition_col is None:
         df.repartition(n_out).write.mode("overwrite").parquet(staging)
     else:
-        # partition count from the col=value directory names — no job
-        # (see partition_values); a partitioned table with zero dirs
-        # cannot occur here (compact is only called on existing stores)
-        n_parts = len(partition_values(spark, path, partition_col))
+        # partition count from the col=value directory names (the
+        # metadata partition discovery uses) — no job; a partitioned
+        # table with zero dirs cannot occur here (compact is only called
+        # on existing stores)
+        n_parts = _glob_count(spark, f"{path.rstrip('/')}/{partition_col}=*")
         per_part = max(1, math.ceil(n_out / max(n_parts, 1)))
         # staging keeps the partitioned directory layout — downstream
         # partition pruning and PARTITION_COL-based rewrites
@@ -122,7 +121,10 @@ def compact(
             "overwrite"
         ).partitionBy(partition_col).parquet(staging)
     _swap_dirs(spark, staging, path)
-    return len(table_file_sizes(spark, path))
+    # data files in the layout just written: at the root, or one
+    # col=value level down; _/. names skipped, as in table_file_sizes
+    level = f"{partition_col}=*/" if partition_col else ""
+    return _glob_count(spark, f"{path.rstrip('/')}/{level}[^_.]*")
 
 
 def _staging_path(path: str) -> str:

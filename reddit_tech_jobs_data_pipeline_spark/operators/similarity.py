@@ -30,6 +30,19 @@ def _dvec(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def _dlit(x: float) -> str:
+    """SQL text of a double literal: repr(float) is the shortest decimal
+    that round-trips, and the 'D' suffix types it DOUBLE, so the parsed
+    literal is the bit-identical double (a bare 0.5 would parse as
+    DECIMAL)."""
+    return repr(float(x)) + "D"
+
+
+def _dvec_sql(vec_col: str) -> str:
+    """SQL text of ``_dvec(F.col(vec_col))``."""
+    return f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+
+
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
@@ -638,20 +651,17 @@ def _frozen_encode_exprs(
     of py4j round-trips for m×ks lambda closures (measured at m=8,
     ks=16), 25× the 0.2 s the encode itself takes. Centroid literals use
     repr(float) + 'D' — shortest-roundtrip decimal, parsed back to the
-    bit-identical double."""
+    bit-identical double (_dlit)."""
     by_sub: dict[int, list] = {}
     for r in books_rows:
         by_sub.setdefault(r.sub, []).append((r.cid, list(r.cvec)))
-
-    def dlit(x: float) -> str:
-        return repr(float(x)) + "D"
 
     exprs = []
     for s in range(m):
         sv = f"slice({vec_sql}, {s * sub_w + 1}, {sub_w})"
         cands = []
         for cid, cvec in sorted(by_sub[s]):
-            cent = "array(" + ", ".join(dlit(x) for x in cvec) + ")"
+            cent = "array(" + ", ".join(_dlit(x) for x in cvec) + ")"
             d = (
                 f"aggregate(zip_with({sv}, {cent}, (x, y) -> (x - y) * (x - y)), "
                 f"0.0D, (acc, x) -> acc + x)"
@@ -1768,20 +1778,42 @@ def srp_planes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
     ]
 
 
-def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """b-bit SRP signature: bit p = sign(<vec, plane_p>), emitted as a
-    '1'/'0' string (cross-engine-stable bucket key). A dot landing
-    EXACTLY on 0 within float reassociation noise could flip a bit
-    between engines; with continuous embeddings the event has measure
-    zero and has never been observed in the gate."""
-    dv = _dvec(vec)
-    bits = [
-        F.when(
-            dot(dv, F.array(*[F.lit(w) for w in plane])) >= 0, F.lit("1")
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
+def _srp_sig_sql(vec_col: str, planes: list[list[float]]) -> str:
+    """SQL text of the b-bit SRP signature of column ``vec_col``: bit p
+    = sign(<vec, plane_p>), emitted as a '1'/'0' string (cross-engine-
+    stable bucket key). A dot landing EXACTLY on 0 within float
+    reassociation noise could flip a bit between engines; with
+    continuous embeddings the event has measure zero and has never been
+    observed in the gate.
+
+    Generated as text and parsed once (the _frozen_encode_exprs
+    technique): the same tree built through the Column API took one
+    py4j round trip per plane weight plus the lambda closures of every
+    dot — ~3.3k round trips for 6 planes × 64 dims, against one parse.
+    The dot is the sequential zip_with/aggregate fold of ``dot`` over
+    ``_dvec``, so the plan and every bit are unchanged."""
+    dv = _dvec_sql(vec_col)
+    bits = []
+    for plane in planes:
+        w = "array(" + ", ".join(_dlit(x) for x in plane) + ")"
+        d = f"aggregate(zip_with({dv}, {w}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+        bits.append(f"CASE WHEN {d} >= 0 THEN '1' ELSE '0' END")
+    return f"concat({', '.join(bits)})"
+
+
+def srp_signature(vec_col: str, planes: list[list[float]]) -> Column:
+    """The b-bit SRP signature of column ``vec_col`` (see _srp_sig_sql)."""
+    return F.expr(_srp_sig_sql(vec_col, planes))
+
+
+def _srp_rows(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str, sig_sql: str
+) -> DataFrame:
+    """(id_as, vec_as, sig): the id, the double vector and an SRP key in
+    one parsed projection."""
+    return df.selectExpr(
+        f"`{id_col}` AS {id_as}", f"{_dvec_sql(vec_col)} AS {vec_as}", f"{sig_sql} AS sig"
+    )
 
 
 def srp_ann_topk(
@@ -1802,16 +1834,9 @@ def srp_ann_topk(
     100 TB: corpus signatures are computed once at scan speed (b dot
     products per row, JVM codegen) and the bucket key is writable as a
     partition/bucket column; each query probes exactly one bucket."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _dvec(F.col(vec_col)).alias("cvec"),
-        srp_signature(F.col(vec_col), planes).alias("sig"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _dvec(F.col(vec_col)).alias("qvec"),
-        srp_signature(F.col(vec_col), planes).alias("sig"),
-    )
+    sig = _srp_sig_sql(vec_col, planes)
+    c = _srp_rows(corpus, id_col, vec_col, "neighbor_id", "cvec", sig)
+    q = _srp_rows(queries, id_col, vec_col, "query_id", "qvec", sig)
     scored = (
         c.join(F.broadcast(q), "sig")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -1836,13 +1861,14 @@ def srp_ann_topk(
     )
 
 
-def _srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Partition-safe SRP bucket key: the b-bit signature prefixed with
-    'b'. Hive-style partition directories type-infer bare digit strings
-    (sig=00101 would read back as the INTEGER 101, silently corrupting
-    the probe's equi-join on leading-zero buckets); the prefix pins the
-    key to a string on every reader with zero information loss."""
-    return F.concat(F.lit("b"), srp_signature(vec, planes))
+def _srp_bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
+    """SQL text of the partition-safe SRP bucket key: the b-bit
+    signature prefixed with 'b'. Hive-style partition directories
+    type-infer bare digit strings (sig=00101 would read back as the
+    INTEGER 101, silently corrupting the probe's equi-join on
+    leading-zero buckets); the prefix pins the key to a string on every
+    reader with zero information loss."""
+    return f"concat('b', {_srp_sig_sql(vec_col, planes)})"
 
 
 def write_srp_index(
@@ -1860,10 +1886,8 @@ def write_srp_index(
     signature projection + a partitioned write, and a probe reads only
     the queries' bucket directories."""
     _cluster_for_partitioned_write(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _dvec(F.col(vec_col)).alias("cvec"),
-            _srp_bucket(F.col(vec_col), planes).alias("sig"),
+        _srp_rows(
+            corpus, id_col, vec_col, "neighbor_id", "cvec", _srp_bucket_sql(vec_col, planes)
         ),
         "sig",
     ).write.mode("overwrite").partitionBy("sig").parquet(path)
@@ -1885,10 +1909,8 @@ def append_srp_index(
     untouched buckets aren't rewritten (fragment buildup is
     maintenance.compact_ivf_index's job — same layout contract)."""
     _cluster_for_partitioned_write(
-        corpus_delta.select(
-            F.col(id_col).alias("neighbor_id"),
-            _dvec(F.col(vec_col)).alias("cvec"),
-            _srp_bucket(F.col(vec_col), planes).alias("sig"),
+        _srp_rows(
+            corpus_delta, id_col, vec_col, "neighbor_id", "cvec", _srp_bucket_sql(vec_col, planes)
         ),
         "sig",
     ).write.mode("append").partitionBy("sig").parquet(path)
@@ -1910,10 +1932,8 @@ def srp_index_topk(
     Scores and ranking replicate srp_ann_topk exactly — parquet
     round-trips the doubles bit-identically — so the same oracle gates
     both the inline and the persisted form."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _dvec(F.col(vec_col)).alias("qvec"),
-        _srp_bucket(F.col(vec_col), planes).alias("sig"),
+    q = _srp_rows(
+        queries, id_col, vec_col, "query_id", "qvec", _srp_bucket_sql(vec_col, planes)
     )
     probed = sorted(r["sig"] for r in q.select("sig").distinct().collect())
     index = spark.read.parquet(index_path).filter(F.col("sig").isin(probed))

@@ -1000,7 +1000,7 @@ def incremental_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_sig.write.mode("overwrite").parquet(path)
     batch_sig = dedup.minhash_signatures(
         corpus.filter(F.col("id") >= 100000), "text", "id", num_hashes=16, n=3
-    )
+    ).localCheckpoint()
     return dedup.incremental_lsh_ingest(
         spark.read.parquet(path), batch_sig, num_hashes=16, bands=4, min_agree=12
     )
@@ -1270,7 +1270,9 @@ def incremental_corpus_daily_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     bq = batch_raw.filter(textfn.quality_score(F.col("text")) >= 0.6)
     bclean = bq.select("id", textfn.pii_redact(F.col("text")).alias("text"))
     store_sig = dedup.minhash_signatures(store, "text", "id", num_hashes=16, n=3)
-    batch_sig = dedup.minhash_signatures(bclean, "text", "id", num_hashes=16, n=3)
+    batch_sig = dedup.minhash_signatures(
+        bclean, "text", "id", num_hashes=16, n=3
+    ).localCheckpoint()
     flags = dedup.incremental_lsh_ingest(
         store_sig, batch_sig, num_hashes=16, bands=4, min_agree=12
     )
@@ -3838,7 +3840,7 @@ def srp_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature projection + one groupBy(sig) — b dot products per row,
     partial-aggregated."""
     emb = _t(spark, sf_dir, "embeddings")
-    sig = similarity.srp_signature(F.col("embedding"), _SRP_PLANES)
+    sig = similarity.srp_signature("embedding", _SRP_PLANES)
     w_all = Window.partitionBy()
     return (
         emb.select(sig.alias("sig"))

@@ -69,8 +69,8 @@ def ingest_batch_line_df(
     sp = batch.sparkSession
 
     def _seen_keys() -> set:
+        # a missing path raises PATH_NOT_FOUND here, at the read
         existing = sp.read.schema(_STORE_SCHEMA).parquet(store_path)
-        existing.isEmpty()
         return {r.batch_key for r in existing.select("batch_key").distinct().collect()}
 
     try:

@@ -72,9 +72,8 @@ def _read_store_or_none(spark: SparkSession, store_path: str) -> DataFrame | Non
     swap first; None only for the genuine first batch."""
 
     def _read() -> DataFrame:
-        store = spark.read.schema(HASH_STORE_SCHEMA).parquet(store_path)
-        store.isEmpty()  # force the existence check eagerly
-        return store
+        # a missing path raises PATH_NOT_FOUND here, at the read
+        return spark.read.schema(HASH_STORE_SCHEMA).parquet(store_path)
 
     try:
         return _read()

@@ -113,14 +113,16 @@ def stream_dedup_ingest(
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
-        sig = minhash_signatures(batch, text_col, id_col, num_hashes, n)
+        # sign once and materialize once: the dedup plan reads the
+        # signature five times and the survivor append once more —
+        # unmaterialized, the append re-scanned and re-shingled the batch
+        sig = minhash_signatures(batch, text_col, id_col, num_hashes, n).localCheckpoint()
 
         def _read_store() -> DataFrame:
-            store = sp.read.schema(_sig_schema(num_hashes)).parquet(store_path)
-            # force the existence check now — an empty/missing dir only
-            # fails lazily, inside the join, otherwise
-            store.isEmpty()
-            return store
+            # a missing path raises PATH_NOT_FOUND here, at the read,
+            # even with a schema (tests/test_streaming_incremental_dedup
+            # pins it) — no probe job needed
+            return sp.read.schema(_sig_schema(num_hashes)).parquet(store_path)
 
         try:
             store = _read_store()

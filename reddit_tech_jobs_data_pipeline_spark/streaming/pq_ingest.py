@@ -74,7 +74,7 @@ def ingest_batch_pq(
     codes_path = f"{index_path}/codes"
 
     def _read_ids() -> DataFrame:
-        # eager-infer read raises PATH_NOT_FOUND here (srp_ingest note)
+        # a missing path raises PATH_NOT_FOUND here, at the read
         return sp.read.parquet(codes_path).select("vec_id")
 
     try:

@@ -27,6 +27,7 @@ import tempfile
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from reddit_tech_jobs_data_pipeline_spark.operators import maintenance, similarity
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
@@ -51,13 +52,17 @@ def ingest_batch_srp(
     idempotently: vectors whose id already rides the store are dropped
     (replay skip — a column-pruned anti-join on neighbor_id)."""
     sp = batch.sparkSession
+    # read with a schema: inference would run one footer-reading job per
+    # batch; a missing path still raises PATH_NOT_FOUND at the read
+    ids_schema = T.StructType(
+        [
+            T.StructField("neighbor_id", batch.schema[id_col].dataType),
+            T.StructField("sig", T.StringType()),
+        ]
+    )
 
     def _read_ids() -> DataFrame:
-        # no explicit schema -> read.parquet infers eagerly and raises
-        # PATH_NOT_FOUND here, so no extra forcing action is needed
-        # (incremental_dedup needs its isEmpty() only because it reads
-        # WITH a schema, which defers the existence check)
-        return sp.read.parquet(store_path).select("neighbor_id")
+        return sp.read.schema(ids_schema).parquet(store_path).select("neighbor_id")
 
     try:
         existing = _read_ids()

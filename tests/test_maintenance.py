@@ -24,8 +24,9 @@ def test_compact_collapses_small_files(spark, fragmented_events):
     assert len(maintenance.table_file_sizes(spark, path)) == 64
     total = sum(maintenance.table_file_sizes(spark, path))
     # target = half the table → exactly 2 output files
+    assert maintenance._scan_bytes(spark.read.parquet(path)) == total
     n_files = maintenance.compact(spark, path, target_bytes=total // 2 + 1)
-    assert n_files == 2
+    assert n_files == 2 == len(maintenance.table_file_sizes(spark, path))
     assert spark.read.parquet(path).count() == n_rows
 
 
@@ -35,11 +36,12 @@ def test_compact_partitioned_keeps_partition_dirs(spark, tmp_path):
     ev.repartition(16).write.partitionBy("event_type").parquet(path)
     before = len(maintenance.table_file_sizes(spark, path))
     total = sum(maintenance.table_file_sizes(spark, path))
-    maintenance.compact(
+    assert maintenance._scan_bytes(spark.read.parquet(path)) == total
+    n_files = maintenance.compact(
         spark, path, target_bytes=total + 1, partition_col="event_type"
     )
     after = len(maintenance.table_file_sizes(spark, path))
-    assert after < before
+    assert n_files == after < before
     got = spark.read.parquet(path)
     assert got.count() == ev.count()
     types = set(r.event_type for r in ev.select("event_type").distinct().collect())

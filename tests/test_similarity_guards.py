@@ -221,8 +221,8 @@ def test_srp_bucket_key_survives_leading_zeros(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, v), (2, near)], "vec_id long, embedding array<double>"
     )
-    sig = df.select(
-        similarity._srp_bucket(F.col("embedding"), planes).alias("s")
+    sig = df.selectExpr(
+        similarity._srp_bucket_sql("embedding", planes) + " AS s"
     ).first().s
     assert sig.startswith("b0"), sig  # the leading-zero case is exercised
     path = str(tmp_path / "srp_zero")
