@@ -66,7 +66,8 @@ def partition_dirs(spark: SparkSession, path: str) -> list[str]:
     """Names of the Hive-style partition columns (``col=value`` top-level
     subdirectories) under ``path``; empty for a flat table. Uses the JVM
     FileSystem API so it answers for any Hadoop-supported store. Layout
-    guards (compact_append_store, compact_ivf_index) key off this: a
+    guards (compact_append_store, compact_ivf_index) and
+    run_store_maintenance key off this: a
     partitioned table must be rewritten WITH partitionBy or its
     directory-level pruning is silently destroyed."""
     jvm = spark._jvm
@@ -286,20 +287,27 @@ def run_store_maintenance(
     target_bytes: int = 128 * 1024 * 1024,
 ) -> int | None:
     """Scheduled compaction hook for streaming foreachBatch loops — the
-    piece that makes the append-only stores' fragment growth BOUNDED in
-    operation, not just compactable in principle: call it at the end of
-    every micro-batch and it compacts the store on every
+    piece that makes every store's fragment growth BOUNDED in operation,
+    not just compactable in principle: call it at the end of every
+    micro-batch and it compacts the store on every
     ``every_n_batches``-th batch (cadence keyed to the engine's
     monotonic batch_id, so restarts don't reset the schedule). Between
     compactions a store holds at most ``every_n_batches`` fresh
     fragments on top of the compacted base — O(interval), not O(total
     batches ever ingested).
 
+    The rewrite keeps the store's layout, read from its directories
+    (partition_dirs): a flat store compacts flat, a store with one
+    ``col=`` partition level (the SRP index's ``sig=``, IVF-PQ codes'
+    ``cell_id=``) compacts per partition so directory pruning survives;
+    top-level dirs of more than one column are not a layout this engine
+    writes, and raise.
+
     Safe inside foreachBatch: the caller is the store's ONLY writer and
     its append completed before this runs (the single-writer requirement
     of compact_append_store), and the rewrite is row-preserving so
-    merged reads and batch_key replay-skip survive it — including a
-    crash-replay of the same batch after a compaction
+    merged reads and replay skips survive it — including a crash-replay
+    of the same batch after a compaction
     (tests/test_store_compaction.py). Returns the new file count, or
     None when this batch isn't on the cadence (or the store doesn't
     exist yet)."""
@@ -315,7 +323,18 @@ def run_store_maintenance(
         p = jvm.org.apache.hadoop.fs.Path(store_path)
         if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
             return None
-    return compact_append_store(spark, store_path, target_bytes=target_bytes)
+    parts = partition_dirs(spark, store_path)
+    if len(parts) > 1:
+        raise ValueError(
+            f"run_store_maintenance: {store_path} has top-level partition "
+            f"dirs of several columns {parts}; refusing to guess its layout"
+        )
+    return compact(
+        spark,
+        store_path,
+        target_bytes=target_bytes,
+        partition_col=parts[0] if parts else None,
+    )
 
 
 def morton_code(a: Column, b: Column, bits: int = 16) -> Column:

@@ -20,25 +20,14 @@ accumulated store is one anti-join on (domain, line-hash).
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from reddit_tech_jobs_data_pipeline_spark.operators.structure import split_lines
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
-    _recover_or_first_batch,
-)
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
-from reddit_tech_jobs_data_pipeline_spark.streaming.tagfiles import write_tag_files
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 #: sentinel line-hash carrying each batch's per-domain document count —
 #: real hashes are 32 hex chars, so collision is impossible by format
@@ -66,21 +55,9 @@ def ingest_batch_line_df(
     per-domain doc counts under its key — skipping keys already present
     (replay safety; missing-path-only first-batch fallback, any other
     store-read failure fails the batch)."""
-    sp = batch.sparkSession
-
-    def _seen_keys() -> set:
-        # a missing path raises PATH_NOT_FOUND here, at the read
-        existing = sp.read.schema(_STORE_SCHEMA).parquet(store_path)
-        return {r.batch_key for r in existing.select("batch_key").distinct().collect()}
-
-    try:
-        seen = _seen_keys()
-    except AnalysisException as e:
-        # repair an interrupted compaction swap (and retry) before
-        # treating a missing path as the first batch
-        seen = _seen_keys() if _recover_or_first_batch(sp, store_path, e) else set()
+    store = runner.read_store(batch.sparkSession, store_path, _STORE_SCHEMA)
     keyed = batch.withColumn("__bk", batch_key_expr)
-    new = keyed.filter(~F.col("__bk").isin(list(seen)) if seen else F.lit(True))
+    new = runner.drop_seen(keyed, store, "__bk", "batch_key")
     lines = split_lines(
         new.select("__bk", id_col, domain_col, text_col), text_col, id_col
     ).withColumn("lh", F.md5("line"))
@@ -152,35 +129,16 @@ def run_boilerplate_ingest_batchlike(
     ``ident`` must name the input (e.g. the sf_dir) — it keys the work
     dir, so two concurrent runs over different inputs don't rmtree each
     other's store/checkpoint (the run_hll_ingest_batchlike contract)."""
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_boiler_{stable_work_key(ident, n_tags, df_ratio)}",
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir("boiler", ident, n_tags, df_ratio)
     store = os.path.join(work, "store")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
-    write_tag_files(pages, F.col("doc_id") % n_tags, src_dir, n_tags)
+    stream = runner.tag_stream(spark, pages, F.col("doc_id") % n_tags, n_tags, work)
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         ingest_batch_line_df(batch, store, batch_key_expr=F.col("doc_id") % n_tags)
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    runner.drain(
+        stream, _ingest, os.path.join(work, "ckpt"), "stream_boilerplate_ingest"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName("stream_boilerplate_ingest")
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
 
     boiler = merged_boilerplate(spark, store, min_docs, df_ratio)
     per_src = boiler.groupBy("source").agg(

@@ -6,10 +6,9 @@ store APPEND-ONLY: each micro-batch writes its own d×w cells tagged
 with a content-derived batch key; the corpus sketch is the groupBy-sum
 of whatever is in the store. No read-modify-write of a mutable store,
 so concurrent writers and replays cannot corrupt anything — a replayed
-batch is skipped by its key (the same idempotent-append discipline as
-streaming/incremental_dedup.py, and the same missing-path-only
-fallback contract for the first batch: any OTHER store-read failure
-fails the batch rather than silently double-counting).
+batch is skipped by its key (runner.drop_seen), and only a first batch
+may find no store (runner.read_store): any OTHER store-read failure
+fails the batch rather than silently double-counting.
 
 Batch determinism for the oracle: documents replay tag-sliced (one
 parquet file per doc_id % n_tags, maxFilesPerTrigger=1), so batch keys
@@ -20,12 +19,8 @@ the catalog oracle recomputes in SQL.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,14 +28,7 @@ from pyspark.sql import types as T
 from reddit_tech_jobs_data_pipeline_spark.functions.extract import tokens
 from reddit_tech_jobs_data_pipeline_spark.operators import maintenance, sketches
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
-    _recover_or_first_batch,
-)
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
-from reddit_tech_jobs_data_pipeline_spark.streaming.tagfiles import write_tag_files
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 _STORE_SCHEMA = T.StructType(
     [
@@ -63,21 +51,9 @@ def ingest_batch_sketch(
     """Sketch one batch's tokens and append the cells under the batch's
     key(s) — skipping any key already present in the store (replay
     safety). The store is never rewritten, only appended."""
-    sp = batch.sparkSession
-
-    def _seen_keys() -> set:
-        # a missing path raises PATH_NOT_FOUND here, at the read
-        existing = sp.read.schema(_STORE_SCHEMA).parquet(store_path)
-        return {r.batch_key for r in existing.select("batch_key").distinct().collect()}
-
-    try:
-        seen = _seen_keys()
-    except AnalysisException as e:
-        # repair an interrupted compaction swap (and retry) before
-        # treating a missing path as the first batch
-        seen = _seen_keys() if _recover_or_first_batch(sp, store_path, e) else set()
+    store = runner.read_store(batch.sparkSession, store_path, _STORE_SCHEMA)
     keyed = batch.select(batch_key_expr.alias("batch_key"), F.col(text_col))
-    new = keyed.filter(~F.col("batch_key").isin(list(seen)) if seen else F.lit(True))
+    new = runner.drop_seen(keyed, store, "batch_key", "batch_key")
     tok = new.select(
         "batch_key", F.explode(tokens(text_col)).alias("token")
     )
@@ -121,15 +97,10 @@ def run_cms_ingest_batchlike(
     replay, then return the top-k tokens by estimate from the MERGED
     store (token, est_n, rank) — by cell additivity this equals the
     single-pass batch sketch, which is what the oracle asserts."""
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cms_{stable_work_key(sf_dir, n_tags, width)}"
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir("cms", sf_dir, n_tags, width)
     store = os.path.join(work, "store")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    write_tag_files(docs, F.col("doc_id") % n_tags, src_dir, n_tags)
+    stream = runner.tag_stream(spark, docs, F.col("doc_id") % n_tags, n_tags, work)
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         ingest_batch_sketch(
@@ -146,22 +117,7 @@ def run_cms_ingest_batchlike(
             batch.sparkSession, store, batch_id, every_n_batches=maintenance_every
         )
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName("stream_cms_ingest")
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), "stream_cms_ingest")
 
     sk = merged_sketch(spark, store)
     vocab = docs.select(F.explode(tokens("text")).alias("token")).distinct()

@@ -33,8 +33,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -42,10 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 _SCAN_SCHEMA = T.StructType(
     [
@@ -194,28 +189,8 @@ def _write_time_chunks(
     ).collect()[0]
     lo, hi = bounds["lo"], bounds["hi"]
     span_days = max(1, ((hi - lo).days + 1 + n_chunks - 1) // n_chunks)
-    os.makedirs(src_dir, exist_ok=True)
     chunk = F.floor(F.datediff(F.to_date("ts"), F.lit(lo)) / span_days)
-    # ONE scan, one shuffle: repartition on the chunk key (each chunk's
-    # rows land in exactly one task) then write partitioned by it — the
-    # 5-sequential-filtered-writes form re-scanned the corpus per chunk
-    tmp = os.path.join(src_dir, "_tmp")
-    (
-        ev.withColumn("__chunk", chunk.cast("int"))
-        .repartition(n_chunks, "__chunk")
-        .write.partitionBy("__chunk")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    for i in range(n_chunks):
-        parts = glob.glob(os.path.join(tmp, f"__chunk={i}", "part-*.parquet"))
-        if not parts:
-            continue
-        assert len(parts) == 1, f"chunk {i} split across {len(parts)} files"
-        dest = os.path.join(src_dir, f"chunk{i}.parquet")
-        os.replace(parts[0], dest)
-        os.utime(dest, (1_000_000 + i, 1_000_000 + i))
-    shutil.rmtree(tmp)
+    runner.write_tag_files(ev, chunk, src_dir, n_chunks, prefix="chunk")
 
 
 def run_stream(
@@ -263,23 +238,14 @@ def run_stream(
             os.path.join(out_root, f"b{batch_id:06d}")
         )
 
-    schema = spark.read.parquet(src_dir).schema
+    # resumes read whatever chunks sit in src, so the schema comes from
+    # the files rather than from the frame that staged them
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(src_dir).schema)
         .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
         .parquet(src_dir)
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_monitor)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName(name)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    runner.drain(stream, _monitor, os.path.join(work, "ckpt"), name)
 
 
 def read_events(spark: SparkSession, work: str) -> DataFrame:
@@ -309,11 +275,7 @@ def run_cusum_monitor_batchlike(
     row — bit-identical to the one-shot batch scan because the state
     store carries the exact boundary statistic (post-reset when the
     user's last chunk event alarmed)."""
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_cusum_{stable_work_key(sf_dir, n_chunks, target, threshold)}",
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = runner.scratch_dir("cusum", sf_dir, n_chunks, target, threshold)
     _write_time_chunks(spark, sf_dir, os.path.join(work, "src"), n_chunks)
     run_stream(spark, work, target, threshold, name)
     return read_events(spark, work)

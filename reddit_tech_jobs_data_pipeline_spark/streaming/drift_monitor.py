@@ -19,21 +19,14 @@ slice's PSI against the full-table distribution in batch SQL.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_tech_jobs_data_pipeline_spark.operators import drift
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
-from reddit_tech_jobs_data_pipeline_spark.streaming.tagfiles import write_tag_files
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 
 def baseline_histogram(
@@ -90,16 +83,6 @@ def batch_psi_vs_baseline(
     return drift.psi_from_counts(binned, group_cols=["tag"])
 
 
-def _write_tag_files(
-    spark: SparkSession, sf_dir: str, src_dir: str, n_tags: int
-) -> None:
-    """One flat parquet file per user_id % n_tags slice — each micro-batch
-    under maxFilesPerTrigger=1 is then exactly one deterministic slice."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    os.makedirs(src_dir, exist_ok=True)
-    write_tag_files(ev, F.col("user_id") % n_tags, src_dir, n_tags)
-
-
 def run_drift_psi_batchlike(
     spark: SparkSession,
     sf_dir: str,
@@ -112,13 +95,10 @@ def run_drift_psi_batchlike(
     micro-batch. The baseline histogram is built once up front (the
     persisted-model step); each foreachBatch call aggregates only its
     own rows."""
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_drift_{stable_work_key(sf_dir, n_tags)}"
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir("drift", sf_dir, n_tags)
     out_dir = os.path.join(work, "out")
-    shutil.rmtree(work, ignore_errors=True)
-    _write_tag_files(spark, sf_dir, src_dir, n_tags)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
+    stream = runner.tag_stream(spark, ev, F.col("user_id") % n_tags, n_tags, work)
 
     baseline_rows = (
         baseline_histogram(
@@ -136,20 +116,5 @@ def run_drift_psi_batchlike(
         )
         out.write.mode("append").parquet(out_dir)
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_monitor)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName(name)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    runner.drain(stream, _monitor, os.path.join(work, "ckpt"), name)
     return spark.read.parquet(out_dir).localCheckpoint()

@@ -20,30 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` (which fixes the stateful-
-    operator partition count at stream start) for the duration of a
-    batchlike run, then restore.
-
-    State-store overhead is PER PARTITION per micro-batch (delta +
-    snapshot files, store maintenance, task scheduling — including the
-    trailing no-data batch), so over-partitioning a modest stream is
-    expensive: measured locally at sf0.1, the interval join runs 13.8s
-    with 32 state partitions vs 2.8s with 8, identical results. At
-    production volumes state must SHARD, not shrink — size the count to
-    keep per-partition state in memory (it is baked into the checkpoint
-    at first start). Override via SPARK_GRAFT_STREAM_PARTITIONS."""
-    n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -104,21 +81,7 @@ def run_windowed_counts_batchlike(
     the result as a normal DataFrame. Used by the catalog so the driver
     can oracle-check streaming semantics against batch SQL."""
     agg = windowed_counts(read_events_stream(spark, sf_dir))
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # eager localCheckpoint: materializes before the memory sink goes
-        # stale at q.stop(), and the blocks are GC-cleaned with the DataFrame
-        # (a .cache() here would leak in the CacheManager for the session)
-        out = spark.table(name).localCheckpoint()
-        q.stop()
-    return out
+    return runner.drain_to_memory(agg, name, "complete")
 
 
 def stream_upsert_to_gold(
@@ -136,21 +99,15 @@ def stream_upsert_to_gold(
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
-        try:
-            old = sp.read.parquet(gold_path)
-        except Exception:  # first batch: no gold yet  # noqa: BLE001
-            old = batch.limit(0)
-        merged = merge_upsert(old, batch, ["event_id"], "ts")
+        # only a genuine first batch may find no gold (runner.read_store)
+        old = runner.read_store(sp, gold_path, batch.schema)
+        merged = merge_upsert(
+            batch.limit(0) if old is None else old, batch, ["event_id"], "ts"
+        )
         merged.write.mode("overwrite").parquet(gold_path + "_tmp")
         sp.read.parquet(gold_path + "_tmp").write.mode("overwrite").parquet(gold_path)
 
-    q = (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    runner.drain(events, _merge, checkpoint, None)
 
 
 def interval_join_stream(
@@ -210,21 +167,7 @@ def run_interval_join_batchlike(
     """Run the stream-stream interval join to completion over the finite
     events input (append mode into a memory sink)."""
     joined = interval_join_stream(read_events_stream(spark, sf_dir))
-    with _stream_shuffle_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # eager localCheckpoint: materializes before the memory sink goes
-        # stale at q.stop(), and the blocks are GC-cleaned with the DataFrame
-        # (a .cache() here would leak in the CacheManager for the session)
-        out = spark.table(name).localCheckpoint()
-        q.stop()
-    return out
+    return runner.drain_to_memory(joined, name, "append")
 
 
 def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -253,22 +196,7 @@ def run_dedup_stream_batchlike(
     if isinstance(schema["ts"].dataType, T.TimestampNTZType):
         # withWatermark rejects NTZ outright; UTC relabel is instant-preserving
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    with _stream_shuffle_partitions(spark):
-        q = (
-            dedup_stream(raw)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # eager localCheckpoint: materializes before the memory sink goes
-        # stale at q.stop(), and the blocks are GC-cleaned with the DataFrame
-        # (a .cache() here would leak in the CacheManager for the session)
-        out = spark.table(name).localCheckpoint()
-        q.stop()
-    return out
+    return runner.drain_to_memory(dedup_stream(raw), name, "append")
 
 
 def run_session_windows_batchlike(
@@ -298,18 +226,7 @@ def run_session_windows_batchlike(
             "total_value",
         )
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name).localCheckpoint()
-        q.stop()
-    return out
+    return runner.drain_to_memory(agg, name, "complete")
 
 
 def run_stream_static_join_batchlike(
@@ -321,10 +238,8 @@ def run_stream_static_join_batchlike(
     attaching slowly-changing reference data to a firehose. The dim is
     broadcast when it fits (it is a dimension; it fits), so the stream
     never reshuffles."""
-    import os as _os
-
     ev = read_events_stream(spark, sf_dir)
-    dim = spark.read.parquet(_os.path.join(sf_dir, "customer.parquet")).select(
+    dim = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     joined = (
@@ -335,15 +250,4 @@ def run_stream_static_join_batchlike(
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name).localCheckpoint()
-        q.stop()
-    return out
+    return runner.drain_to_memory(joined, name, "complete")

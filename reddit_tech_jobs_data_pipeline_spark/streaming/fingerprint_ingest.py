@@ -27,17 +27,14 @@ at Hamming 0 — the cross join keeps id_a == id_b for exactly this
 reason); the vote rule additionally carries an id-presence skip, because
 a stored single-distinct-frame video cannot out-vote the ≥2 threshold
 against itself. A missing store is accepted only as the first batch,
-after interrupted-compaction-swap repair (_recover_or_first_batch).
+after interrupted-compaction-swap repair (runner.read_store).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,14 +46,8 @@ from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
     shared_hash_vote_pairs,
     shared_hash_vote_pairs_cross,
 )
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
-    _recover_or_first_batch,
-)
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
-from reddit_tech_jobs_data_pipeline_spark.streaming.tagfiles import write_tag_files
 
 HASH_STORE_SCHEMA = T.StructType(
     [
@@ -65,20 +56,6 @@ HASH_STORE_SCHEMA = T.StructType(
         T.StructField("h_hi", T.LongType()),
     ]
 )
-
-
-def _read_store_or_none(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """Read a fingerprint store, repairing an interrupted compaction
-    swap first; None only for the genuine first batch."""
-
-    def _read() -> DataFrame:
-        # a missing path raises PATH_NOT_FOUND here, at the read
-        return spark.read.schema(HASH_STORE_SCHEMA).parquet(store_path)
-
-    try:
-        return _read()
-    except AnalysisException as e:
-        return _read() if _recover_or_first_batch(spark, store_path, e) else None
 
 
 def ingest_batch_fingerprints(
@@ -91,8 +68,7 @@ def ingest_batch_fingerprints(
     module docstring for the rules and the structural replay skip).
     ``fps`` should already be materialized (localCheckpoint) by the
     caller — the decode pass is the expensive part and feeds two joins."""
-    sp = fps.sparkSession
-    store = _read_store_or_none(sp, store_path)
+    store = runner.read_store(fps.sparkSession, store_path, HASH_STORE_SCHEMA)
     dup_ids = None
     if store is not None:
         # expand_right=False: only WHETHER a batch id matched matters —
@@ -130,12 +106,12 @@ def ingest_batch_frame_votes(
     appending survivors' frame rows. The id-presence skip (anti-join on
     stored ids) makes replays total even for videos whose distinct-frame
     count is below the vote threshold."""
-    sp = fh.sparkSession
-    frames = fh.select("id", "h_lo", "h_hi").distinct()
-    store = _read_store_or_none(sp, store_path)
+    store = runner.read_store(fh.sparkSession, store_path, HASH_STORE_SCHEMA)
+    frames = runner.drop_seen(
+        fh.select("id", "h_lo", "h_hi").distinct(), store, "id", "id"
+    )
     dup_ids = None
     if store is not None:
-        frames = frames.join(store.select("id").distinct(), "id", "left_anti")
         dup_ids = (
             shared_hash_vote_pairs_cross(
                 frames, store, min_shared=min_shared, max_frame_df=max_frame_df
@@ -169,20 +145,14 @@ def run_two_batch_ingest_batchlike(
     store_path)`` → cadenced store compaction), and return the final
     store's ids — the accepted, deduplicated corpus. ``distinct_ids``
     for per-frame stores where one id holds many rows."""
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_{work_name}_{stable_work_key(work_name)}"
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir(work_name, work_name)
     store = os.path.join(work, "store")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
-    # one scan, one shuffle; write_tag_files stamps increasing mtimes
-    # (the FileStreamSource ordering key) in batch order
-    write_tag_files(
+    stream = runner.tag_stream(
+        spark,
         blobs,
         F.when(F.col("id") % 4 < 2, F.lit(0)).otherwise(F.lit(1)),
-        src_dir,
         2,
+        work,
         prefix="batch",
     )
 
@@ -192,22 +162,7 @@ def run_two_batch_ingest_batchlike(
             batch.sparkSession, store, batch_id, every_n_batches=maintenance_every
         )
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName(f"stream_{work_name}")
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), f"stream_{work_name}")
 
     out = spark.read.schema(HASH_STORE_SCHEMA).parquet(store).select("id")
     if distinct_ids:

@@ -23,26 +23,15 @@ value-checked exactly.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
-    _recover_or_first_batch,
-)
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
-from reddit_tech_jobs_data_pipeline_spark.streaming.tagfiles import write_tag_files
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 _STORE_SCHEMA = T.StructType(
     [
@@ -64,25 +53,13 @@ def ingest_batch_hll(
     (batch_key, group) — skipping keys already present (replay safety;
     same missing-path-only first-batch fallback contract as the other
     stores: any non-PATH_NOT_FOUND read failure fails the batch)."""
-    sp = batch.sparkSession
-
-    def _seen_keys() -> set:
-        # a missing path raises PATH_NOT_FOUND here, at the read
-        existing = sp.read.schema(_STORE_SCHEMA).parquet(store_path)
-        return {r.batch_key for r in existing.select("batch_key").distinct().collect()}
-
-    try:
-        seen = _seen_keys()
-    except AnalysisException as e:
-        # repair an interrupted compaction swap (and retry) before
-        # treating a missing path as the first batch
-        seen = _seen_keys() if _recover_or_first_batch(sp, store_path, e) else set()
+    store = runner.read_store(batch.sparkSession, store_path, _STORE_SCHEMA)
     keyed = batch.select(
         batch_key_expr.alias("batch_key"),
         F.col(group_col).alias("grp"),
         F.col(key_col).cast("string").alias("__k"),
     )
-    new = keyed.filter(~F.col("batch_key").isin(list(seen)) if seen else F.lit(True))
+    new = runner.drop_seen(keyed, store, "batch_key", "batch_key")
     sk = new.groupBy("batch_key", "grp").agg(F.hll_sketch_agg("__k").alias("sk"))
     if not sk.isEmpty():
         sk.write.mode("append").parquet(store_path)
@@ -111,15 +88,10 @@ def run_hll_ingest_batchlike(
     merged, and the 5% bound flag. Batch keys are the deterministic tag
     values, so n_batches_merged is exactly the number of tags in which
     the type occurs — which the oracle recomputes in SQL."""
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_hll_{stable_work_key(sf_dir, n_tags)}"
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir("hll", sf_dir, n_tags)
     store = os.path.join(work, "store")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    write_tag_files(ev, F.col("event_id") % n_tags, src_dir, n_tags)
+    stream = runner.tag_stream(spark, ev, F.col("event_id") % n_tags, n_tags, work)
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         ingest_batch_hll(batch, store, batch_key_expr=F.col("event_id") % n_tags)
@@ -129,22 +101,7 @@ def run_hll_ingest_batchlike(
             batch.sparkSession, store, batch_id, every_n_batches=maintenance_every
         )
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName("stream_hll_ingest")
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), "stream_hll_ingest")
 
     est = merged_hll(spark, store)
     exact = ev.groupBy(F.col("event_type").alias("grp")).agg(

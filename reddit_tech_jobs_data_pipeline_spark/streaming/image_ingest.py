@@ -23,7 +23,7 @@ Replay safety is STRUCTURAL: a replayed batch's survivors are already
 in the store, so they self-match at Hamming 0 in step 1 and drop —
 nothing is appended twice, no id bookkeeping needed. A missing store is
 accepted only as the first batch, after interrupted-compaction-swap
-repair (the _recover_or_first_batch contract).
+repair (the runner.read_store contract).
 """
 
 from __future__ import annotations

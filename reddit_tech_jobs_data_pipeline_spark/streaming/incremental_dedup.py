@@ -30,7 +30,6 @@ parquet scan of (id, mh_0..mh_k) only.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -38,45 +37,7 @@ from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
     incremental_lsh_ingest,
     minhash_signatures,
 )
-
-
-def _is_missing_path(e: AnalysisException) -> bool:
-    """True iff the AnalysisException is the path-does-not-exist case
-    (the only failure a first batch legitimately produces)."""
-    cond = None
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:  # noqa: BLE001 — accessor shape varies by version
-                cond = None
-            if cond:
-                break
-    if cond is not None:
-        return "PATH_NOT_FOUND" in cond
-    return "Path does not exist" in str(e)
-
-
-def _recover_or_first_batch(spark: SparkSession, store_path: str, e: AnalysisException) -> bool:
-    """Shared missing-path discipline for every streaming store reader:
-    re-raise anything that isn't the PATH_NOT_FOUND case, then — before
-    declaring a first batch — check whether the path is missing because a
-    compaction swap crashed between its delete and rename (staging dir
-    holds the only copy; round-11 advisor finding). If so, complete the
-    rename and return True so the caller RETRIES the read; returning
-    False means the store genuinely never existed (the one legitimate
-    first-batch state). Without this, a crash-replay would silently
-    rebuild the store from the current batch alone and the next cadence
-    compaction would overwrite the staging dir — destroying the last
-    surviving copy."""
-    if not _is_missing_path(e):
-        raise e
-    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (
-        recover_interrupted_swap,
-    )
-
-    return recover_interrupted_swap(spark, store_path)
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
 
 def _sig_schema(num_hashes: int) -> T.StructType:
@@ -118,39 +79,18 @@ def stream_dedup_ingest(
         # unmaterialized, the append re-scanned and re-shingled the batch
         sig = minhash_signatures(batch, text_col, id_col, num_hashes, n).localCheckpoint()
 
-        def _read_store() -> DataFrame:
-            # a missing path raises PATH_NOT_FOUND here, at the read,
-            # even with a schema (tests/test_streaming_incremental_dedup
-            # pins it) — no probe job needed
-            return sp.read.schema(_sig_schema(num_hashes)).parquet(store_path)
-
-        try:
-            store = _read_store()
-        except AnalysisException as e:
-            # ONLY the first-batch missing-store case may fall back to an
-            # empty store; any other read failure (permissions, corrupt
-            # footer, transient FS error) must fail the batch — silently
-            # treating it as "no store" would reset dedup state and append
-            # duplicate signatures permanently. An interrupted compaction
-            # swap is repaired (and the read retried) before declaring a
-            # first batch.
-            if _recover_or_first_batch(sp, store_path, e):
-                store = _read_store()
-            else:
-                store = sig.limit(0)
-        out = incremental_lsh_ingest(store, sig, num_hashes, bands, min_agree)
+        # only a genuine first batch may see no store (runner.read_store)
+        store = runner.read_store(sp, store_path, _sig_schema(num_hashes))
+        out = incremental_lsh_ingest(
+            sig.limit(0) if store is None else store, sig, num_hashes, bands, min_agree
+        )
         survivors = sig.join(
             out.filter("is_new").select("id"), "id", "left_semi"
         )
         # idempotent-append layer: a replayed batch's survivors are
         # already in the store — never append an id twice
-        survivors = survivors.join(store.select("id"), "id", "left_anti")
-        survivors.write.mode("append").parquet(store_path)
+        runner.drop_seen(survivors, store, "id", "id").write.mode("append").parquet(
+            store_path
+        )
 
-    q = (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    runner.drain(docs, _ingest, checkpoint, None)

@@ -13,13 +13,12 @@ books, stream-ingested ≡ one-shot encode of the union — the catalog
 gates the post-stream probe with the SAME unrolled oracle as the batch
 append (``_pq_sql(train_where=...)``).
 
-Idempotent-append discipline (the incremental_dedup contract): a
+Idempotent-append discipline (runner.read_store / runner.drop_seen): a
 replayed batch's vectors already have codes, so the ingest left-anti
 joins the batch against the codes table's vec_ids (column-pruned id
 scan — m+1 small ints per row, never raw vectors) before encoding; only
 the first-batch missing-path read may fall back to an empty store, and
-an interrupted compaction swap is repaired first
-(_recover_or_first_batch). Scheduled compaction
+an interrupted compaction swap is repaired first. Scheduled compaction
 (maintenance.run_store_maintenance) bounds the flat codes table's
 fragment growth to O(cadence); books are a single file and never
 compacted.
@@ -34,25 +33,25 @@ encodes forward).
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
-import tempfile
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from reddit_tech_jobs_data_pipeline_spark.operators import maintenance, similarity
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-    _stream_shuffle_partitions,
-)
-from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
-    _recover_or_first_batch,
-)
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
-from reddit_tech_jobs_data_pipeline_spark.streaming.tagfiles import write_tag_files
+from reddit_tech_jobs_data_pipeline_spark.streaming import runner
+
+
+def _new_vectors(batch: DataFrame, codes_path: str, id_col: str) -> DataFrame:
+    """The batch minus vectors whose id already has a code (replay skip:
+    a column-pruned read of the codes table's vec_ids, typed like the
+    batch ids it was encoded from)."""
+    ids = T.StructType([T.StructField("vec_id", batch.schema[id_col].dataType)])
+    codes = runner.read_store(batch.sparkSession, codes_path, ids)
+    return runner.drop_seen(batch, codes, id_col, "vec_id")
 
 
 def ingest_batch_pq(
@@ -70,29 +69,12 @@ def ingest_batch_pq(
     load the frozen model once instead of re-reading it per batch; a
     crash-replay in a fresh process simply reloads from disk — the
     model is immutable after the build, so the encode is identical."""
-    sp = batch.sparkSession
-    codes_path = f"{index_path}/codes"
-
-    def _read_ids() -> DataFrame:
-        # a missing path raises PATH_NOT_FOUND here, at the read
-        return sp.read.parquet(codes_path).select("vec_id")
-
-    try:
-        existing = _read_ids()
-    except AnalysisException as e:
-        # repair an interrupted compaction swap (and retry) before
-        # treating a missing path as the first batch
-        existing = _read_ids() if _recover_or_first_batch(sp, codes_path, e) else None
-    new = batch
-    if existing is not None:
-        new = batch.join(
-            existing, batch[id_col] == existing["vec_id"], "left_anti"
-        )
+    new = _new_vectors(batch, f"{index_path}/codes", id_col)
     if new.isEmpty():
         return  # full replay: no empty fragment appended
     similarity.append_pq_index(
-        sp, new, index_path, dim=dim, id_col=id_col, vec_col=vec_col,
-        books_model=books_model,
+        batch.sparkSession, new, index_path, dim=dim, id_col=id_col,
+        vec_col=vec_col, books_model=books_model,
     )
 
 
@@ -116,16 +98,10 @@ def run_pq_ingest_batchlike(
     stream-ingested ≡ batch-built, the frozen-model guarantee made
     end-to-end observable for a TRAINED quantizer, not just SRP's
     data-independent planes."""
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_pqstream_{stable_work_key(sf_dir, n_tags, m, ks)}",
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir("pqstream", sf_dir, n_tags, m, ks)
     index = os.path.join(work, "index")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
     emb = load_table(spark, sf_dir, "embeddings")
-    write_tag_files(emb, F.col("vec_id") % n_tags, src_dir, n_tags)
+    stream = runner.tag_stream(spark, emb, F.col("vec_id") % n_tags, n_tags, work)
 
     # the model: books trained ONCE on history (tag 0), codes NOT
     # written here — every code row arrives through the stream
@@ -147,22 +123,7 @@ def run_pq_ingest_batchlike(
             every_n_batches=maintenance_every,
         )
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName("stream_pq_ingest")
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), "stream_pq_ingest")
 
     return similarity.pq_index_topk(
         spark,
@@ -188,25 +149,12 @@ def ingest_batch_ivfpq(
     codes table's vec_ids — partition columns and m+1 small ints, never
     raw vectors). ``model`` (similarity.load_ivfpq_model) lets a
     multi-batch run load both frozen models once — see ingest_batch_pq."""
-    sp = batch.sparkSession
-    codes_path = f"{index_path}/codes"
-
-    def _read_ids() -> DataFrame:
-        return sp.read.parquet(codes_path).select("vec_id")
-
-    try:
-        existing = _read_ids()
-    except AnalysisException as e:
-        existing = _read_ids() if _recover_or_first_batch(sp, codes_path, e) else None
-    new = batch
-    if existing is not None:
-        new = batch.join(
-            existing, batch[id_col] == existing["vec_id"], "left_anti"
-        )
+    new = _new_vectors(batch, f"{index_path}/codes", id_col)
     if new.isEmpty():
         return
     similarity.append_ivfpq_index(
-        sp, new, index_path, dim=dim, id_col=id_col, vec_col=vec_col, model=model
+        batch.sparkSession, new, index_path, dim=dim, id_col=id_col,
+        vec_col=vec_col, model=model,
     )
 
 
@@ -240,16 +188,10 @@ def run_ivfpq_ingest_batchlike(
     cents = similarity.seeded_centroids(
         load_table(spark, sf_dir, "embeddings"), num_cells
     )
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivfpqstream_{stable_work_key(sf_dir, n_tags, m, ks)}",
-    )
-    src_dir = os.path.join(work, "src")
+    work = runner.scratch_dir("ivfpqstream", sf_dir, n_tags, m, ks)
     index = os.path.join(work, "index")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
     emb = load_table(spark, sf_dir, "embeddings")
-    write_tag_files(emb, F.col("vec_id") % n_tags, src_dir, n_tags)
+    stream = runner.tag_stream(spark, emb, F.col("vec_id") % n_tags, n_tags, work)
 
     # models: frozen coarse quantizer + residual books trained on the
     # tag-0 history; the builder's codes are dropped — the stream is
@@ -271,30 +213,16 @@ def run_ivfpq_ingest_batchlike(
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         ingest_batch_ivfpq(batch, index, dim=dim, model=ivfpq_model)
-        # layout-preserving compaction: cell_id= dirs must survive
-        codes = f"{index}/codes"
-        if maintenance_every > 0 and (batch_id + 1) % maintenance_every == 0:
-            if os.path.exists(codes):
-                maintenance.compact(
-                    batch.sparkSession, codes, partition_col="cell_id"
-                )
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .queryName("stream_ivfpq_ingest")
-            .start()
+        # the codes table is cell_id=-partitioned: maintenance keeps that
+        # layout, which the probe prunes on
+        maintenance.run_store_maintenance(
+            batch.sparkSession,
+            f"{index}/codes",
+            batch_id,
+            every_n_batches=maintenance_every,
         )
-        q.awaitTermination()
-        q.stop()
+
+    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), "stream_ivfpq_ingest")
 
     return similarity.ivfpq_index_topk(
         spark,

@@ -169,8 +169,8 @@ def run_tws_user_stats_batchlike(
         StatefulProcessorHandle,
     )
 
+    from reddit_tech_jobs_data_pipeline_spark.streaming import runner
     from reddit_tech_jobs_data_pipeline_spark.streaming.events import (
-        _stream_shuffle_partitions,
         read_events_stream,
     )
 
@@ -212,17 +212,7 @@ def run_tws_user_stats_batchlike(
             outputMode="Update",
             timeMode="None",
         )
-        with _stream_shuffle_partitions(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            res = spark.table(name).localCheckpoint()
-            q.stop()
+        res = runner.drain_to_memory(out, name, "update")
         # update mode emits one row per key per batch; the LAST emission
         # per key is the running total over the whole replay
         from pyspark.sql import Window

@@ -433,3 +433,60 @@ def test_run_store_maintenance_repairs_before_cadence_check(spark, tmp_path):
     n = run_store_maintenance(spark, store, batch_id=2, every_n_batches=3)
     assert n is not None and os.path.exists(store)
     assert spark.read.parquet(store).count() == before
+
+
+def _sig_layout(path: str) -> dict[str, int]:
+    """sig= partition dir -> number of data files in it."""
+    return {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(path, "sig=*"))
+    }
+
+
+def test_run_store_maintenance_keeps_sig_partitioned_layout(spark, tmp_path):
+    """The SRP index is sig=-partitioned: scheduled maintenance must read
+    that layout and compact per partition — same sig= dirs, same rows,
+    and no more files than partitions at this size — where a flat
+    rewrite would destroy the directory pruning the probe relies on."""
+    from reddit_tech_jobs_data_pipeline_spark.operators import similarity
+    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (
+        run_store_maintenance,
+    )
+    from reddit_tech_jobs_data_pipeline_spark.streaming.srp_ingest import (
+        ingest_batch_srp,
+    )
+
+    emb = load_table(spark, SF, "embeddings")
+    planes = similarity.srp_planes(4, 64)
+    store = str(tmp_path / "srp_store")
+    for tag in range(3):
+        ingest_batch_srp(emb.filter(F.col("vec_id") % 3 == tag), store, planes)
+    before = _sig_layout(store)
+    rows = sorted(
+        tuple(r) for r in spark.read.parquet(store).select("neighbor_id", "sig").collect()
+    )
+    assert sum(before.values()) > len(before)  # several fragments per bucket
+
+    assert run_store_maintenance(spark, store, batch_id=2, every_n_batches=3) is not None
+    after = _sig_layout(store)
+    assert after.keys() == before.keys()
+    assert all(n == 1 for n in after.values())
+    assert sorted(
+        tuple(r) for r in spark.read.parquet(store).select("neighbor_id", "sig").collect()
+    ) == rows
+
+
+def test_run_store_maintenance_refuses_ambiguous_layout(spark, tmp_path):
+    """Top-level partition dirs of two columns are not a layout any store
+    writes: maintenance raises instead of picking one."""
+    import pytest
+
+    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (
+        run_store_maintenance,
+    )
+
+    store = tmp_path / "mixed"
+    spark.range(4).write.parquet(str(store / "a=1"))
+    spark.range(4).write.parquet(str(store / "b=1"))
+    with pytest.raises(ValueError, match="several columns"):
+        run_store_maintenance(spark, str(store), batch_id=2, every_n_batches=3)

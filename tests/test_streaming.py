@@ -75,6 +75,22 @@ class TestForeachBatchUpsert:
         assert out.count() == n_events  # event_id unique -> all rows land
         assert out.select("event_id").distinct().count() == n_events
 
+    def test_unreadable_gold_fails_the_batch(self, spark, tmp_path):
+        """Only a missing gold is a first batch. A gold dir that exists
+        but cannot be read (here a corrupt part file) must fail the
+        drain, not be replaced by the batch alone."""
+        import os
+
+        import pytest
+
+        gold = tmp_path / "gold_events"
+        gold.mkdir()
+        (gold / "part-00000-corrupt.parquet").write_bytes(b"not a parquet file")
+        before = sorted(os.listdir(gold))
+        with pytest.raises(Exception):
+            sev.stream_upsert_to_gold(spark, SF, str(gold), str(tmp_path / "ckpt"))
+        assert sorted(os.listdir(gold)) == before
+
 
 class TestStatefulSessionizer:
     def test_sessions_match_batch_operator(self, spark, tmp_path):

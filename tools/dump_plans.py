@@ -32,6 +32,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dump_plans")
     reg = get_registry()
+    caller_dir = os.environ.get("SPARK_GRAFT_PLAN_DUMP_DIR")
     for name in names:
         # fresh per-query capture dir so first-call-wins tags don't
         # collide across queries sharing an operator
@@ -40,7 +41,10 @@ def main() -> None:
         try:
             df = reg[name].spark(spark, sf_dir)
         finally:
-            del os.environ["SPARK_GRAFT_PLAN_DUMP_DIR"]
+            if caller_dir is None:
+                del os.environ["SPARK_GRAFT_PLAN_DUMP_DIR"]
+            else:
+                os.environ["SPARK_GRAFT_PLAN_DUMP_DIR"] = caller_dir
         plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
