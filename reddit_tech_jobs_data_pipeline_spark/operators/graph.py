@@ -316,7 +316,7 @@ def _pagerank(
         )
     try:
         # node count is ONE bounded scalar (same license as the watermark
-        # probe — SCALE.md "one intentional collect"): resolving it driver-
+        # probe — SCALE.md "Global posture"): resolving it driver-
         # side turns the (1-d)/n term into a literal and drops a broadcast
         # join from every iteration. float(n) division is the same IEEE op
         # the previous bigint→double column cast performed.

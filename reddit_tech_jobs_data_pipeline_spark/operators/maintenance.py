@@ -12,8 +12,11 @@ helps that column).
 
 Both rewrite data files only — pure DataFrame jobs, no table format
 required; with a transactional format (Delta/Iceberg) the same rewrites
-run under OPTIMIZE. Swap-by-staging mirrors sources/sink.py's
-last-writer-wins rewrite.
+run under OPTIMIZE.
+
+It also owns the crash-safe swaps both rewrites and sources/sink.py's
+partition rewrites use, their recovery, and read_store, the one read
+that tells a table that never existed from one that cannot be read.
 """
 
 from __future__ import annotations
@@ -21,17 +24,23 @@ from __future__ import annotations
 import math
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem holding ``path``, and ``path`` as a Hadoop
+    Path."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def table_file_sizes(spark: SparkSession, path: str) -> list[int]:
     """Byte sizes of the table's data files, via the JVM FileSystem API
     (works on any Hadoop-supported store, not just local disk)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_fs(spark, path)
     sizes: list[int] = []
     it = fs.listFiles(p, True)
     while it.hasNext():
@@ -58,8 +67,8 @@ def _glob_count(spark: SparkSession, pattern: str) -> int:
     through a Spark read lists the partition dirs in a job once there
     are more than 32. Like ``spark.read.parquet``, it reads glob
     characters in the base path as a pattern."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(pattern)
-    return len(p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p))
+    fs, p = hadoop_fs(spark, pattern)
+    return len(fs.globStatus(p))
 
 
 def partition_dirs(spark: SparkSession, path: str) -> list[str]:
@@ -70,10 +79,7 @@ def partition_dirs(spark: SparkSession, path: str) -> list[str]:
     run_store_maintenance key off this: a
     partitioned table must be rewritten WITH partitionBy or its
     directory-level pruning is silently destroyed."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return []
     cols: set[str] = set()
@@ -134,82 +140,161 @@ def _staging_path(path: str) -> str:
     return path.rstrip("/") + "__compact_staging"
 
 
+def partition_staging_path(path: str) -> str:
+    """The staging sibling a partition swap (swap_partitions) moves
+    into ``path`` — fixed, like _staging_path, so recovery needs no
+    state."""
+    return path.rstrip("/") + "__staging"
+
+
 def recover_interrupted_swap(spark: SparkSession, path: str) -> bool:
-    """Repair the one non-atomic window in compaction's swap: _swap_dirs
-    is delete(path) then rename(staging -> path), so a crash between the
-    two leaves the table MISSING with the only surviving copy sitting in
-    the staging dir. Before this existed, every streaming store reader
-    treated a missing path as the legitimate first-batch case — on
-    replay it would silently rebuild the store from the current batch
-    alone, and the NEXT cadence compaction would overwrite staging,
-    destroying that last copy (round-11 advisor finding). Callers (the
-    store readers' missing-path fallbacks, compact itself,
-    run_store_maintenance) invoke this first; it returns True iff it
-    completed the rename and the table is back.
+    """Finish or discard what a crashed swap left beside ``path``. Every
+    reader and rewriter of a store or of gold runs this first
+    (read_store, compact, run_store_maintenance, purge_keys), so a crash
+    anywhere in a swap is repaired by the next run instead of being read
+    as a missing or half-written table. Returns True iff it restored a
+    missing table from compaction staging.
 
-    State table (delete only ever runs after staging's write committed,
-    so the dangerous state is unambiguous):
+    Both swaps write a complete staging sibling first; its ``_SUCCESS``
+    marker (written by the staging job's commit, before any delete or
+    rename) says the staged copy is whole. State table:
 
-    - no staging dir            -> nothing to do (False)
-    - staging + path both exist -> crash BEFORE the delete (or a stale
-      rerun): path is authoritative and staging holds the same rows —
-      drop staging so later checks stay unambiguous (False)
-    - staging, path missing     -> the interrupted swap: staging is the
-      complete table; finish the rename (True). A staging dir without
-      its _SUCCESS marker in this state is corruption, not a crash
-      artifact — refuse loudly rather than promote a partial table.
+    ===================== =================== ============================
+    staging sibling       state               rule
+    ===================== =================== ============================
+    ``__staging``         no ``_SUCCESS``     crashed write; ``path`` was
+    (swap_partitions)                         never touched: drop staging
+    ``__staging``         ``_SUCCESS``        staging wins (roll forward):
+                                              move every partition still
+                                              staged into ``path``, then
+                                              drop staging
+    ``__compact_staging`` ``path`` exists     table wins: the crash came
+    (compact/_swap_dirs)                      before the delete and both
+                                              hold the same rows: drop
+                                              staging
+    ``__compact_staging`` ``path`` missing,   the interrupted swap:
+                          ``_SUCCESS``        finish the rename (True)
+    ``__compact_staging`` ``path`` missing,   corruption, not a crash
+                          no ``_SUCCESS``     artifact: raise IOError
+    ===================== =================== ============================
+
+    The rules are opposite because the staged rows differ. Compaction is
+    row-preserving, so while the table exists it is as good as its
+    staging. A partition swap stages NEW rows (a merge or purge result),
+    and once one partition has moved, ``path`` is half old and half
+    new; only finishing the moves makes it consistent again.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    src = jvm.org.apache.hadoop.fs.Path(_staging_path(path))
-    fs = dst.getFileSystem(conf)
+    fs, dst = hadoop_fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    parts = Path(partition_staging_path(path))
+    if fs.exists(parts):
+        if fs.exists(Path(parts, "_SUCCESS")):
+            swap_partitions(spark, partition_staging_path(path), path)
+        else:
+            fs.delete(parts, True)
+    src = Path(_staging_path(path))
     if not fs.exists(src):
         return False
     if fs.exists(dst):
         fs.delete(src, True)
         return False
-    success = jvm.org.apache.hadoop.fs.Path(_staging_path(path) + "/_SUCCESS")
-    if not fs.exists(success):
+    if not fs.exists(Path(src, "_SUCCESS")):
         raise IOError(
             f"recover_interrupted_swap: {path} is missing and its staging "
             f"sibling has no _SUCCESS marker — refusing to promote a "
             "partial table; inspect the staging dir by hand."
         )
-    if not fs.rename(src, dst):
-        raise IOError(
-            f"recover_interrupted_swap: rename {_staging_path(path)} -> "
-            f"{path} failed"
-        )
+    _replace_dir(fs, src, dst)
     return True
 
 
-def _swap_dirs(spark: SparkSession, staging: str, path: str) -> None:
-    """Promote a fully-written staging table over ``path`` with two
-    metadata operations (delete + rename) instead of re-reading staging
-    and rewriting it into place. This halves compaction's write volume
-    AND shrinks the crash exposure: the old read-back form could crash
-    MID-OVERWRITE and leave ``path`` partially written with staging
-    already consumed, while here every crash state is recoverable —
-    either ``path`` still exists (before the delete; staging is complete
-    and the compaction can simply rerun) or staging is complete and the
-    recovery is one rename (staging-present-and-path-missing is the
-    unambiguous marker). recover_interrupted_swap IMPLEMENTS that
-    recovery and runs at the head of compact, run_store_maintenance, and
-    every streaming store reader's missing-path fallback — the
-    delete-to-rename window is therefore routine-crash-safe, not just
-    recoverable in principle. Uses the Hadoop FileSystem API, so it holds on
-    any store with directory rename (local, HDFS; object stores emulate
-    it per-key but the ordering argument is unchanged)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(staging)
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src.getFileSystem(conf)
-    if not fs.delete(dst, True):
-        raise IOError(f"compact: could not remove {path} for swap")
+def _replace_dir(fs, src, dst) -> None:
+    """Make ``dst`` the directory ``src`` is, with two metadata
+    operations (delete + rename) instead of a re-read and rewrite. The
+    delete must succeed first: a rename onto an existing directory would
+    nest ``src`` inside it. Hadoop FileSystem API, so it holds on any
+    store with directory rename (local, HDFS; object stores emulate it
+    per key, but the ordering argument is unchanged)."""
+    if fs.exists(dst) and not fs.delete(dst, True):
+        raise IOError(f"swap: could not remove {dst.toString()}")
     if not fs.rename(src, dst):
-        raise IOError(f"compact: rename {staging} -> {path} failed")
+        raise IOError(f"swap: rename {src.toString()} -> {dst.toString()} failed")
+
+
+def _swap_dirs(spark: SparkSession, staging: str, path: str) -> None:
+    """Promote a fully-written staging table over ``path`` (_replace_dir).
+    Every crash state is recoverable: before the delete, ``path`` still
+    exists and staging is a complete spare; after it, staging is complete
+    and recovery is the one rename (recover_interrupted_swap)."""
+    fs, src = hadoop_fs(spark, staging)
+    _replace_dir(fs, src, spark._jvm.org.apache.hadoop.fs.Path(path))
+
+
+def swap_partitions(spark: SparkSession, staging: str, path: str) -> None:
+    """Move each ``col=value`` directory of a committed staging table
+    (``partition_staging_path``) into ``path``, replacing that partition
+    — the metadata sequence Spark's own dynamic partition overwrite runs
+    at job commit, without writing the data a second time. Partitions
+    absent from staging keep their files byte-identical; an EMPTY staged
+    partition directory means "delete this partition" (purge_keys marks
+    emptied partitions that way, since no row can carry them). Every
+    step is idempotent and staging, with its ``_SUCCESS``, is removed
+    only after the last move, so recover_interrupted_swap finishes a
+    crashed swap by running this again. Ends by refreshing the session's
+    cached file listing of ``path``."""
+    fs, src = hadoop_fs(spark, staging)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    for st in fs.listStatus(src):
+        name = st.getPath().getName()
+        if not st.isDirectory() or name.startswith(("_", ".")):
+            continue
+        staged, target = st.getPath(), Path(path.rstrip("/") + "/" + name)
+        if len(fs.listStatus(staged)) == 0:
+            fs.delete(target, True)
+            fs.delete(staged, True)
+        else:
+            _replace_dir(fs, staged, target)
+    fs.delete(src, True)
+    # the session's cached file listing of ``path`` names replaced files
+    spark.catalog.refreshByPath(path)
+
+
+def _is_missing_path(e: Exception) -> bool:
+    """True iff the exception is the path-does-not-exist case (the only
+    failure a first batch legitimately produces)."""
+    cond = None
+    for attr in ("getCondition", "getErrorClass"):
+        fn = getattr(e, attr, None)
+        if fn is not None:
+            try:
+                cond = fn()
+            except Exception:  # noqa: BLE001 — accessor shape varies by version
+                cond = None
+            if cond:
+                break
+    if cond is not None:
+        return "PATH_NOT_FOUND" in cond
+    return "Path does not exist" in str(e)
+
+
+def read_store(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> DataFrame | None:
+    """Read a persisted store or the gold table with ``schema`` (no
+    inference job), after recover_interrupted_swap has repaired whatever
+    a crashed swap left. A missing path raises PATH_NOT_FOUND at the
+    read, even with a schema (tests/test_streaming_incremental_dedup.py
+    pins it); that alone means the table never existed, and gives None.
+    Any other failure re-raises: treating it as "no table" would reset a
+    store's state and append duplicates permanently, or overwrite gold
+    with one batch."""
+    recover_interrupted_swap(spark, path)
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if not _is_missing_path(e):
+            raise
+    return None
 
 
 def compact_append_store(
@@ -319,9 +404,8 @@ def run_store_maintenance(
     # and the next cadence's staging write would destroy the copy
     recover_interrupted_swap(spark, store_path)
     if not os.path.exists(store_path):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(store_path)
-        if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        fs, p = hadoop_fs(spark, store_path)
+        if not fs.exists(p):
             return None
     parts = partition_dirs(spark, store_path)
     if len(parts) > 1:

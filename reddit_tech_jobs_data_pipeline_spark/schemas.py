@@ -35,6 +35,17 @@ POSTS_SCHEMA = T.StructType(
     ]
 )
 
+# The gold table (sources/sink.py): posts, the merge version column, then
+# the partition column derived from created_datetime. Gold is always read
+# with it, so no read pays an inference job.
+GOLD_SCHEMA = T.StructType(
+    POSTS_SCHEMA.fields
+    + [
+        T.StructField("ingest_ts", T.TimestampType(), True),
+        T.StructField("created_date", T.DateType(), True),
+    ]
+)
+
 # Raw scrape record before enrichment (reference dags/dag.py:239-249
 # post_data dict): what the HTML parse stage emits.
 RAW_POST_SCHEMA = T.StructType(

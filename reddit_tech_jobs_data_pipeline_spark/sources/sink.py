@@ -6,8 +6,9 @@ same access pattern the ``idx_posts_created_datetime`` index served —
 watermark probes (max over recent partitions) and recency filters prune to
 a handful of partitions instead of scanning the table.
 
-At 100 TB: daily partitions keep rewrite units bounded (see
-operators/merge.upsert_partitioned); a second-level bucket-by on the merge
+At 100 TB: daily partitions keep rewrite units bounded (upsert_gold and
+purge_keys rewrite only the partitions a batch touches); a second-level
+bucket-by on the merge
 key (post_id) would additionally make upsert joins shuffle-free — noted
 here because vanilla parquet tables only support bucketing through the
 catalog (``bucketBy`` + saveAsTable).
@@ -18,7 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (
+    hadoop_fs,
+    partition_staging_path,
+    read_store,
+    recover_interrupted_swap,
+    swap_partitions,
+)
 from reddit_tech_jobs_data_pipeline_spark.operators.merge import merge_upsert
+from reddit_tech_jobs_data_pipeline_spark.schemas import GOLD_SCHEMA
 
 PARTITION_COL = "created_date"
 
@@ -39,17 +48,12 @@ def _touched_pred(touched: list) -> F.Column:
 
 def ensure_gold_table(spark: SparkSession, path: str, name: str = "posts_gold") -> None:
     """CREATE TABLE IF NOT EXISTS analog (S7): external parquet table
-    partitioned by date, registered in the session catalog."""
+    partitioned by date, registered in the session catalog. Its columns
+    are GOLD_SCHEMA's, the schema every gold read uses."""
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in GOLD_SCHEMA)
     spark.sql(
         f"""
-        CREATE TABLE IF NOT EXISTS {name} (
-          post_id STRING, title STRING, url STRING, text STRING,
-          author STRING, subreddit STRING, created_datetime TIMESTAMP,
-          upvotes INT, comments_count INT, salary_currency STRING,
-          lower_salary DOUBLE, upper_salary DOUBLE, job_position STRING,
-          location STRING, field STRING, technologies ARRAY<STRING>,
-          ingest_ts TIMESTAMP, {PARTITION_COL} DATE
-        )
+        CREATE TABLE IF NOT EXISTS {name} ({cols})
         USING parquet
         PARTITIONED BY ({PARTITION_COL})
         LOCATION '{path}'
@@ -77,16 +81,29 @@ def write_gold(df: DataFrame, path: str) -> None:
     )
 
 
-def upsert_gold(spark: SparkSession, path: str, new: DataFrame, version_col: str = "ingest_ts") -> None:
+def upsert_gold(
+    spark: SparkSession,
+    path: str,
+    new: DataFrame,
+    version_col: str = "ingest_ts",
+    touched: list | None = None,
+) -> None:
     """S8/D2 — keyed last-writer-wins upsert touching ONLY the partitions
-    present in the incoming batch (dynamic partition overwrite).
+    present in the incoming batch.
 
-    The merge result is staged to a scratch path before overwriting:
-    overwriting a path that the same plan lazily reads races file deletion
-    against the read (FAILED_READ_FILE). The stage-then-swap costs one
-    extra write of the touched partitions only — bounded by batch size,
-    not table size. (A transactional table format would make this a
-    single-commit MERGE; on vanilla parquet staging is the safe primitive.)
+    Gold's touched partitions are read with GOLD_SCHEMA (read_store: a
+    crashed swap is finished first, and an unreadable gold raises rather
+    than reading as empty), merged with ``new``, and the merge is written
+    once to a staging sibling. swap_partitions then moves each staged
+    partition over gold's copy by delete + rename: no file of gold is
+    deleted while the merge still reads it, untouched partitions keep
+    their files byte-identical, and a crash during the moves is rolled
+    forward by the next read (recover_interrupted_swap). A transactional
+    table format would make this a single-commit MERGE.
+
+    ``touched`` lists the batch's partition values when the caller
+    already has them (run_incremental observes them while materializing
+    silver); without it one distinct-collect over ``new`` finds them.
 
     INVARIANT: the partition column derives from ``created_datetime``,
     which is immutable per post_id (a post's creation time never changes;
@@ -96,122 +113,68 @@ def upsert_gold(spark: SparkSession, path: str, new: DataFrame, version_col: str
     key→partition index or a full-key semi-join — different operator.
     """
     new = with_partition_col(new)
-    touched = [r[0] for r in new.select(PARTITION_COL).distinct().collect()]
-    old = spark.read.parquet(path).filter(_touched_pred(touched))
-    merged = merge_upsert(old, new, ["post_id"], version_col)
-    staging = path.rstrip("/") + "__staging"
+    if touched is None:
+        touched = [r[0] for r in new.select(PARTITION_COL).distinct().collect()]
+    old = read_store(spark, path, GOLD_SCHEMA)
+    if old is None:
+        raise FileNotFoundError(f"upsert_gold: no gold table at {path}; write_gold bootstraps it")
+    merged = merge_upsert(old.filter(_touched_pred(touched)), new, ["post_id"], version_col)
+    staging = partition_staging_path(path)
     merged.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(staging)
-    _dynamic_overwrite(spark, staging, path, schema=merged.schema)
-    _rm(staging)
-    # drop the cached file listing for the path — stale entries would point
-    # readers at the overwritten part files
-    spark.catalog.refreshByPath(path)
+    swap_partitions(spark, staging, path)
 
 
 def purge_keys(spark: SparkSession, path: str, keys: DataFrame, key_col: str = "post_id") -> int:
     """Targeted row deletion (the right-to-erasure / bad-record purge
     corner of the sink's CRUD surface): remove every row whose key
     appears in ``keys``, rewriting ONLY the partitions that contain one.
+    Returns the number of rows removed.
 
-    Two phases, both pruned: (1) a semi-join over the table finds the
-    affected partition values — at 100 TB this is a broadcast semi-join
-    of the (tiny) key list against the partition column projection;
-    (2) those partitions are re-written via left_anti and dynamic
-    partition overwrite through the same stage-then-swap as upsert_gold.
+    One aggregate over the table (a broadcast left join of the tiny key
+    list, projected to the key and partition columns) counts, per
+    partition, its rows and its purged rows. Partitions with a purged
+    row are the touched ones; those where every row is purged are
+    emptied. The survivors of the others are staged once (left_anti) and
+    swapped in through the same crash-safe partition swap as upsert_gold.
     Untouched partitions keep their files byte-identical
-    (tests/test_purge.py proves it). Returns the number of rows removed.
+    (tests/test_purge.py proves it).
 
-    Partitions whose rows are ALL purged need special care: dynamic
-    partition overwrite only replaces partitions PRESENT in the staged
-    data, so an emptied partition would silently survive the swap. After
-    staging we diff the staged partition values against ``touched`` and
-    explicitly delete every emptied partition directory (Hadoop FS API,
-    so it works on any store). If EVERY touched partition empties, the
-    staged data has no partitions at all and the swap is skipped
-    entirely — only the deletes run.
+    An emptied partition has no row left to carry it into staging, so it
+    is marked there by an empty ``col=value`` directory, created before
+    the staging write commits: the swap deletes gold's copy, and a crash
+    rolls the deletion forward with the rest. Directory names use Spark's
+    own escaping (_escape_partition_value), so a value with special
+    characters or a NULL one deletes the directory that is really there.
     """
-    keys = keys.select(F.col(key_col)).distinct()
+    recover_interrupted_swap(spark, path)
+    hit = keys.select(F.col(key_col)).distinct()
     table = spark.read.parquet(path)
-    touched = [
-        r[0]
-        for r in table.join(F.broadcast(keys), key_col, "left_semi")
-        .select(PARTITION_COL)
-        .distinct()
+    parts = (
+        table.join(F.broadcast(hit.withColumn("__hit", F.lit(1))), key_col, "left")
+        .groupBy(PARTITION_COL)
+        .agg(F.count("__hit").alias("hits"), F.count(F.lit(1)).alias("rows"))
+        .filter(F.col("hits") > 0)
         .collect()
-    ]
-    if not touched:
-        return 0
-    touched_pred = _touched_pred(touched)
-    affected = table.filter(touched_pred)
-    n_before = affected.count()
-    kept = affected.join(F.broadcast(keys), key_col, "left_anti")
-    staging = path.rstrip("/") + "__purge_staging"
-    kept.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(staging)
-    staged_vals = _partition_values(spark, staging)
-    # compare ESCAPED dir names on both sides: Spark percent-escapes
-    # special characters (space, ':', '/') in partition directory values,
-    # so a raw str(v) comparison would misclassify any escaping-needing
-    # value as emptied and then delete the wrong (unescaped) path
-    emptied = [
-        e
-        for e in (_escape_partition_value(spark, v) for v in touched)
-        if e not in staged_vals
-    ]
-    if staged_vals:
-        _dynamic_overwrite(spark, staging, path, schema=kept.schema)
-    for e in emptied:
-        _fs_delete(spark, f"{path.rstrip('/')}/{PARTITION_COL}={e}")
-    _rm(staging)
-    spark.catalog.refreshByPath(path)
-    # explicit schema: a fully-emptied table has no files to infer from
-    n_after = (
-        spark.read.schema(table.schema)
-        .parquet(path)
-        .filter(touched_pred)
-        .count()
     )
-    return n_before - n_after
-
-
-def _dynamic_overwrite(spark: SparkSession, staging: str, path: str, schema=None) -> None:
-    """Swap staged partitions into ``path`` under dynamic partition
-    overwrite, saving and restoring the session-level mode so a later
-    mode=overwrite write that expects static semantics is unaffected.
-
-    ``schema`` (the staged DataFrame's schema) must be passed whenever
-    the staged data can be null-partition-only: with nothing but a
-    ``__HIVE_DEFAULT_PARTITION__`` directory to look at, partition-type
-    inference yields VOID and the re-write would fail with
-    INVALID_PARTITION_COLUMN_DATA_TYPE."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        reader.parquet(staging).write.mode("overwrite").partitionBy(
-            PARTITION_COL
-        ).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _partition_values(spark: SparkSession, path: str) -> set[str]:
-    """Partition values present as ``col=value`` directories under
-    ``path`` (stringified, matching Spark's partition-dir encoding)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    vals: set[str] = set()
-    if not fs.exists(p):
-        return vals
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if status.isDirectory() and "=" in name:
-            vals.add(name.split("=", 1)[1])
-    return vals
+    if not parts:
+        return 0
+    staging = partition_staging_path(path)
+    fs, root = hadoop_fs(spark, staging)
+    fs.delete(root, True)
+    for r in parts:
+        if r["hits"] == r["rows"]:
+            e = _escape_partition_value(spark, r[0])
+            fs.mkdirs(spark._jvm.org.apache.hadoop.fs.Path(f"{staging}/{PARTITION_COL}={e}"))
+    kept = [r[0] for r in parts if r["hits"] < r["rows"]]
+    (
+        table.filter(_touched_pred(kept))
+        .join(F.broadcast(hit), key_col, "left_anti")
+        .write.mode("append")
+        .partitionBy(PARTITION_COL)
+        .parquet(staging)
+    )
+    swap_partitions(spark, staging, path)
+    return sum(r["hits"] for r in parts)
 
 
 def _escape_partition_value(spark: SparkSession, v) -> str:
@@ -227,16 +190,3 @@ def _escape_partition_value(spark: SparkSession, v) -> str:
     return spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(
         str(v)
     )
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(p, True)
-
-
-def _rm(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)

@@ -10,7 +10,8 @@ rather than in each store module:
   micro-batch each under ``maxFilesPerTrigger=1``) and returns the reader;
 - ``drain`` / ``drain_to_memory`` run a query to completion under the
   pinned stream shuffle-partition count;
-- ``read_store`` is the missing-path contract every store reader shares;
+- ``read_store`` (operators/maintenance.py, re-exported here) is the
+  missing-path contract every store reader shares;
 - ``drop_seen`` is the replay-skip anti-join.
 
 Replay safety rests on the last two. foreachBatch is at-least-once (a
@@ -31,13 +32,11 @@ import tempfile
 import time
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (
-    recover_interrupted_swap,
+from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (  # noqa: F401
+    read_store,
 )
 from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
 
@@ -187,45 +186,6 @@ def drain_to_memory(df: DataFrame, name: str, mode: str) -> DataFrame:
             return spark.table(name).localCheckpoint()
         finally:
             q.stop()
-
-
-def _is_missing_path(e: Exception) -> bool:
-    """True iff the exception is the path-does-not-exist case (the only
-    failure a first batch legitimately produces)."""
-    cond = None
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:  # noqa: BLE001 — accessor shape varies by version
-                cond = None
-            if cond:
-                break
-    if cond is not None:
-        return "PATH_NOT_FOUND" in cond
-    return "Path does not exist" in str(e)
-
-
-def read_store(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame | None:
-    """Read a persisted store with ``schema`` (no inference job). A
-    missing path raises PATH_NOT_FOUND at the read, even with a schema
-    (tests/test_streaming_incremental_dedup.py pins it). Before that is
-    taken as a first batch, an interrupted compaction swap is repaired —
-    the staging dir may hold the only copy — and the read retried; None
-    means the store genuinely never existed. Any other failure re-raises:
-    treating it as "no store" would reset the store's state and append
-    duplicates permanently."""
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if not _is_missing_path(e):
-            raise
-    if recover_interrupted_swap(spark, path):
-        return spark.read.schema(schema).parquet(path)
-    return None
 
 
 def drop_seen(

@@ -137,3 +137,21 @@ class TestEmptyInputSchema:
         assert out.count() == 0
         for f in ["salary_currency", "lower_salary", "job_position", "technologies"]:
             assert f in out.columns
+
+
+def test_gold_table_ddl_matches_gold_schema(spark, tmp_path):
+    """ensure_gold_table's catalog table and GOLD_SCHEMA (the schema
+    every gold read uses) agree, up to nullability."""
+    from pyspark.sql import types as T
+
+    from reddit_tech_jobs_data_pipeline_spark.schemas import GOLD_SCHEMA
+
+    def nullable(schema):
+        return T.StructType([T.StructField(f.name, f.dataType, True) for f in schema])
+
+    name = "posts_gold_schema_pin"
+    sink.ensure_gold_table(spark, str(tmp_path / "gold"), name=name)
+    try:
+        assert nullable(spark.table(name).schema) == nullable(GOLD_SCHEMA)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -100,7 +100,7 @@ def test_corrupt_store_fails_batch_instead_of_resetting(spark, tmp_path):
 
 def test_missing_path_detection_is_narrow(spark):
     """_is_missing_path: true only for the path-not-found condition."""
-    from reddit_tech_jobs_data_pipeline_spark.streaming.runner import _is_missing_path
+    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import _is_missing_path
     import pytest as _pytest
 
     with _pytest.raises(Exception) as exc_info:
@@ -117,7 +117,7 @@ def test_missing_path_detection_is_narrow(spark):
 def test_schema_read_of_missing_store_raises_at_the_read(spark, tmp_path):
     """Every streaming store reader relies on a schema'd parquet read of a
     missing path raising PATH_NOT_FOUND AT THE READ (no action needed) —
-    that is what routes a first batch into runner.read_store's repair. If a
+    that is what routes a first batch into read_store's None. If a
     Spark upgrade defers the check, the missing-store case would surface
     inside the append's plan instead; fail here first."""
     from pyspark.errors import AnalysisException
@@ -125,7 +125,7 @@ def test_schema_read_of_missing_store_raises_at_the_read(spark, tmp_path):
     from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
         _sig_schema,
     )
-    from reddit_tech_jobs_data_pipeline_spark.streaming.runner import _is_missing_path
+    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import _is_missing_path
     import pytest as _pytest
 
     with _pytest.raises(AnalysisException) as exc_info:
