@@ -25,7 +25,7 @@ that is the one real skew risk (boilerplate shingles shared by every doc).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from reddit_tech_jobs_data_pipeline_spark.functions.extract import bind1, tokens, tokens_sql
@@ -634,111 +634,45 @@ def incremental_lsh_ingest(
 # near-dup clusters (connected components over the pair graph)
 # ---------------------------------------------------------------------------
 
-def cluster_near_dups(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
-    """Connected components over near-dup pairs: every doc in a pair gets
-    ``cluster_id`` = the minimum doc id reachable through the pair graph
-    (the canonical survivor). Input: (id_a, id_b); output: (id, cluster_id).
+def cluster_near_dups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Connected components over near-dup pairs: every id in ``pairs``
+    gets ``cluster_id`` = the minimum id reachable through the pair graph
+    (the canonical survivor). Input: (id_a, id_b); output: (id, cluster_id),
+    one row per id — an id seen only in a self-pair labels itself.
 
-    Iterative min-label propagation — each round is one join + one
-    aggregation (both hash-shuffled on id), converging in
-    O(component diameter) rounds (near-dup clusters are shallow; the
-    ``max_iter`` cap is a safety rail). The loop materializes only the
-    label table per round — the DataFrame iterative-algorithm pattern
-    (GraphFrames-free). Driver-side work is one scalar convergence check
-    per round.
-    """
-    from reddit_tech_jobs_data_pipeline_spark.operators.graph import (
-        iterative_shuffle_partitions,
-    )
-
-    # materialize the symmetrized edge list OUTSIDE the pinned context
-    # (full-data distinct at session sizing) and size the loop's pin from
-    # its count — a cheap probe of the already-checkpointed blocks
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    with iterative_shuffle_partitions(pairs.sparkSession, rows=edges.count()):
-        return _cluster_near_dups(edges, max_iter)
-
-
-def _cluster_near_dups(edges: DataFrame, max_iter: int) -> DataFrame:
-    # localCheckpoint, not cache: a .cache() only short-circuits physical
-    # execution — the LOGICAL plan still re-derives the full lineage every
-    # round, so an unrolled loop's plan grows O(iterations²) (the round-2
-    # plan audit measured 2016 scans / 768 exchanges for this operator).
-    # Eager localCheckpoint materializes each round AND truncates the plan
-    # to a leaf, keeping analysis O(1) per round; the checkpoint blocks are
-    # ContextCleaner-GC'd with the DataFrame, so nothing leaks past the call.
-    # (The symmetrized edge table itself arrives checkpointed from the
-    # wrapper.)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def cluster_near_dups_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", 2014) — same output contract as ``cluster_near_dups``
-    (id, cluster_id = component minimum), different convergence class:
-    star contraction halves component HEIGHT structurally each round and
+    Alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", 2014): star
+    contraction halves component HEIGHT structurally each round and
     converges in O(log n) rounds regardless of diameter, where min-label
-    propagation needs O(diameter) rounds. For near-dup clusters (shallow)
-    the two tie; for chain-shaped graphs (linked boilerplate, crawl
-    chains) star contraction wins — the 100 TB CC of choice. Each phase
-    is one groupBy(min) + one join, hash-shuffled on the center node;
-    rounds are localCheckpointed like every iterative operator here.
+    propagation needs O(diameter) rounds — chain-shaped graphs (linked
+    boilerplate, crawl chains) cost a handful of rounds, not their
+    length. Each phase is one groupBy(min) + one join, hash-shuffled on
+    the center node; rounds are localCheckpointed like every iterative
+    operator here.
 
     * large-star: each center u connects its strictly-larger neighbors
       to m = min(N(u) ∪ {u});
     * small-star: each center c connects its smaller neighbors (and
       itself) to m = min of those neighbors.
+
+    Raises RuntimeError when ``max_iter`` rounds pass without a stable
+    round: partial labels would silently split components.
     """
     from reddit_tech_jobs_data_pipeline_spark.operators.graph import (
         iterative_shuffle_partitions,
     )
 
-    edges = (
+    # the lazy ``pairs`` plan (the whole LSH pipeline) runs once, here;
+    # self-pairs stay so their ids keep a row, and the observed
+    # non-self count sizes the loop's shuffle pin
+    obs = Observation()
+    all_edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
         .distinct()
+        .observe(obs, F.count_if(F.col("u") != F.col("v")).alias("n"))
         .localCheckpoint()
     )
+    n = obs.get["n"]
     # AQE stays ON for the contraction loop — re-measured r15 on the new
     # linear round plan (explode-union small star): AQE-off cuts the
     # per-round job count 49 -> 15 but the pinned sort-merge rounds cost
@@ -746,8 +680,17 @@ def cluster_near_dups_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # 2.9-3.05 s on, 3 interleaved A/Bs) — AQE's runtime broadcast
     # conversion of the star joins is worth its extra jobs here, the
     # same conclusion r14 reached on the old two-branch plan.
-    with iterative_shuffle_partitions(pairs.sparkSession, rows=edges.count()):
-        return _cluster_near_dups_star(edges, max_iter)
+    with iterative_shuffle_partitions(pairs.sparkSession, rows=n):
+        edges = _star_fixpoint(all_edges.filter(F.col("u") != F.col("v")), n, max_iter)
+    # fixpoint edges are (node, component_root) stars; roots label themselves
+    labels = edges.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
+    roots = (
+        all_edges.select(F.explode(F.array("u", "v")).alias("id"))
+        .distinct()
+        .join(labels, "id", "left_anti")
+        .withColumn("cluster_id", F.col("id"))
+    )
+    return labels.unionByName(roots)
 
 
 def _star_edges(e: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
@@ -755,10 +698,10 @@ def _star_edges(e: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     ``.distinct()`` — ONE exchange less per phase (r15, guide §2.4):
     every consumer of a phase's output is duplicate-insensitive (the
     next phase's ``groupBy(...).agg(min)`` is map-side combined, its
-    join only multiplies rows the round's FINAL distinct collapses, and
-    the convergence check is a pair of set-semantics anti-joins), so
-    only the round's last phase needs the dedup, which also bounds
-    duplicate growth across rounds."""
+    join only multiplies rows the round's FINAL distinct collapses), so
+    only the round's last phase needs the dedup — which the convergence
+    check's count comparison relies on, and which bounds duplicate
+    growth across rounds."""
     if large:
         d = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -797,14 +740,10 @@ def _star_edges(e: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
-def _cluster_near_dups_star(edges: DataFrame, max_iter: int) -> DataFrame:
-    # edges arrive normalized (u, v), self-loop-free, and checkpointed
-    all_nodes = (
-        edges.select(F.col("u").alias("id"))
-        .unionByName(edges.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+def _star_fixpoint(edges: DataFrame, n: int, max_iter: int) -> DataFrame:
+    """Run star rounds until one reproduces its input edge set. Both
+    sets are distinct, so equal observed counts plus an empty one-sided
+    anti-join prove equality; a round whose count moved needs no probe."""
     from reddit_tech_jobs_data_pipeline_spark.plandump import dump_stage_plan
 
     for _ in range(max_iter):
@@ -812,20 +751,17 @@ def _cluster_near_dups_star(edges: DataFrame, max_iter: int) -> DataFrame:
             _star_edges(edges, large=True, dedup=False), large=False
         )
         dump_stage_plan(round_df, "cc_star_round")
-        nxt = round_df.localCheckpoint()
-        stable = (
-            nxt.join(edges, ["u", "v"], "left_anti").limit(1).isEmpty()
-            and edges.join(nxt, ["u", "v"], "left_anti").limit(1).isEmpty()
-        )
-        edges = nxt
+        obs = Observation()
+        nxt = round_df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        m = obs.get["n"]
+        stable = m == n and nxt.join(edges, ["u", "v"], "left_anti").limit(1).isEmpty()
+        edges, n = nxt, m
         if stable:
-            break
-    # fixpoint edges are (node, component_root) stars; roots label themselves
-    labels = edges.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
-    roots = all_nodes.join(labels, "id", "left_anti").withColumn(
-        "cluster_id", F.col("id")
+            return edges
+    raise RuntimeError(
+        f"connected components did not converge in max_iter={max_iter} "
+        f"star rounds (last round: {n} edges)"
     )
-    return labels.unionByName(roots)
 
 
 def incremental_cluster_update(
@@ -842,19 +778,13 @@ def incremental_cluster_update(
     re-converges in O(log n) rounds; in the common case (new pairs touch
     few components) almost all stars are already fixpoints after one
     pass."""
-    label_edges = labels.filter(F.col("id") != F.col("cluster_id")).select(
+    # self-pairs included: an old singleton keeps its row untouched
+    label_edges = labels.select(
         F.col("id").alias("id_a"), F.col("cluster_id").alias("id_b")
     )
-    singletons = labels.select(F.col("id"))
-    merged = cluster_near_dups_star(
+    return cluster_near_dups(
         label_edges.unionByName(new_pairs.select("id_a", "id_b")), max_iter
     )
-    # docs that were singleton components and stay untouched by new
-    # pairs never appear in any edge — restore their self-labels
-    untouched = singletons.join(merged.select("id"), "id", "left_anti").withColumn(
-        "cluster_id", F.col("id")
-    )
-    return merged.unionByName(untouched)
 
 
 def edit_distance_near_dup_pairs(
@@ -1552,7 +1482,7 @@ def leakage_safe_split(
     [train, train+val) → 'val', rest → 'test'. Returns
     (id, group_id, split). One CC pass + one broadcast-free left join;
     the hash adds no shuffle."""
-    clusters = cluster_near_dups_star(pairs)
+    clusters = cluster_near_dups(pairs)
     base = docs.select(F.col(id_col).alias("id"))
     grouped = base.join(clusters, "id", "left").select(
         "id", F.coalesce("cluster_id", F.col("id")).alias("group_id")
@@ -1601,7 +1531,9 @@ def _hamming_band_explode(
     )
 
 
-def _apply_max_band_df(banded: DataFrame, max_band_df: int | None) -> DataFrame:
+def _apply_max_band_df(
+    banded: DataFrame, max_band_df: int | None, census: DataFrame | None = None
+) -> DataFrame:
     """Optional hot-bucket lever: drop band keys carrying more than
     ``max_band_df`` DISTINCT hashes before the self/cross join — the
     Hamming family's ``max_gram_df``. Exact-hash collapse already
@@ -1610,16 +1542,58 @@ def _apply_max_band_df(banded: DataFrame, max_band_df: int | None) -> DataFrame:
     content: monochrome-with-noise images, near-silence) and would
     candidate-pair quadratically. Dropping the key costs recall only
     for pairs whose ONLY matching band is the hot one — the documented
-    trade every LSH family here offers."""
+    trade every LSH family here offers. Keys are counted over
+    ``census`` (one row per distinct (bkey, lo, hi); default ``banded``
+    itself), so a cross join caps a key hot on either side."""
     if max_band_df is None:
         return banded
     hot = (
-        banded.groupBy("bkey")
+        (banded if census is None else census)
+        .groupBy("bkey")
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") > max_band_df)
         .select("bkey")
     )
     return banded.join(F.broadcast(hot), "bkey", "left_anti")
+
+
+def _check_pigeonhole(band_bits: int, max_hamming: int) -> None:
+    """A pair within Hamming ≤ nbands-1 shares at least one exact band,
+    so ``max_hamming`` past that would silently under-report pairs."""
+    if 64 % band_bits != 0 or band_bits > 32:
+        raise ValueError("bands must split the two 32-bit halves")
+    nbands = 64 // band_bits
+    if max_hamming >= nbands:
+        # ValueError, not assert: the contract must survive python -O
+        # (r13 ADVICE finding)
+        raise ValueError(
+            f"pigeonhole guarantee is Hamming <= {nbands - 1} at {band_bits}-bit bands; "
+            f"max_hamming={max_hamming} would silently under-report pairs"
+        )
+
+
+def _verified_rep_pairs(
+    lb: DataFrame, rb: DataFrame, max_hamming: int, keep: Column
+) -> DataFrame:
+    """Rep-vs-rep band equi-join of two banded rep tables (id, lo, hi,
+    bkey), filtered by ``keep`` and then verified with bit_count(xor) on
+    each half: (rid_a, lo_a, hi_a, bkey, rid_b, lo_b, hi_b, hamming),
+    one row per shared band — callers project and distinct."""
+    a = lb.select(
+        F.col("id").alias("rid_a"), F.col("lo").alias("lo_a"), F.col("hi").alias("hi_a"), "bkey"
+    )
+    b = rb.select(
+        F.col("id").alias("rid_b"), F.col("lo").alias("lo_b"), F.col("hi").alias("hi_b"), "bkey"
+    )
+    ham = F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b"))) + F.bit_count(
+        F.col("hi_a").bitwiseXOR(F.col("hi_b"))
+    )
+    return (
+        a.join(b, "bkey")
+        .filter(keep)
+        .filter(ham <= max_hamming)
+        .withColumn("hamming", ham)
+    )
 
 
 def hamming_band_pairs(
@@ -1641,8 +1615,8 @@ def hamming_band_pairs(
     within Hamming ≤ nbands-1 differs in at most nbands-1 bands, so at
     least one band matches exactly — at the default 4×16 every pair
     within Hamming ≤ 3 is found, a superset of the max_hamming=2
-    verify. ``max_hamming`` must stay inside that guarantee (asserted):
-    a larger cutoff would silently under-report pairs.
+    verify. ``max_hamming`` must stay inside that guarantee (else
+    ValueError): a larger cutoff would silently under-report pairs.
 
     Degenerate-content safety (the 100 TB case the planted fixtures
     don't exercise): real corpora carry BULK identical fingerprints —
@@ -1680,35 +1654,15 @@ def hamming_band_pairs(
     pure integer xor/bit_count, codegen'd, and runs BEFORE the distinct
     so the dedup shuffle carries only true near-dups. Hash extraction
     (the mapInPandas decode) dominates end to end."""
-    if 64 % band_bits != 0 or band_bits > 32:
-        raise ValueError("bands must split the two 32-bit halves")
-    nbands = 64 // band_bits
-    if max_hamming >= nbands:
-        # ValueError, not assert: the contract must survive python -O
-        # (r13 ADVICE finding)
-        raise ValueError(
-            f"pigeonhole guarantee is Hamming <= {nbands - 1} at {band_bits}-bit bands; "
-            f"max_hamming={max_hamming} would silently under-report pairs"
-        )
+    _check_pigeonhole(band_bits, max_hamming)
     members = hashes.select(
         F.col(id_col).alias("id"), F.col(lo_col).alias("lo"), F.col(hi_col).alias("hi")
     )
     reps = members.groupBy("lo", "hi").agg(F.min("id").alias("id"))
     banded = _apply_max_band_df(_hamming_band_explode(reps, band_bits), max_band_df)
-    a = banded.select(
-        F.col("id").alias("rid_a"), F.col("lo").alias("lo_a"), F.col("hi").alias("hi_a"), "bkey"
-    )
-    b = banded.select(
-        F.col("id").alias("rid_b"), F.col("lo").alias("lo_b"), F.col("hi").alias("hi_b"), "bkey"
-    )
-    ham = F.bit_count(
-        F.col("lo_a").bitwiseXOR(F.col("lo_b"))
-    ) + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
     rep_pairs = (
-        a.join(b, "bkey")
-        .filter(F.col("rid_a") < F.col("rid_b"))
-        .filter(ham <= max_hamming)
-        .select("rid_a", "lo_a", "hi_a", "rid_b", "lo_b", "hi_b", ham.alias("hamming"))
+        _verified_rep_pairs(banded, banded, max_hamming, F.col("rid_a") < F.col("rid_b"))
+        .select("rid_a", "lo_a", "hi_a", "rid_b", "lo_b", "hi_b", "hamming")
         .distinct()
     )
     # star edges: every non-minimal member of an identical-hash group
@@ -1779,16 +1733,7 @@ def hamming_band_pairs_cross(
     asks WHETHER a batch id matched the store, not against which store
     rows). Candidates only from the 2^band_bits-bucket join, never a
     product."""
-    if 64 % band_bits != 0 or band_bits > 32:
-        raise ValueError("bands must split the two 32-bit halves")
-    nbands = 64 // band_bits
-    if max_hamming >= nbands:
-        # ValueError, not assert: the contract must survive python -O
-        # (r13 ADVICE finding)
-        raise ValueError(
-            f"pigeonhole guarantee is Hamming <= {nbands - 1} at {band_bits}-bit bands; "
-            f"max_hamming={max_hamming} would silently under-report pairs"
-        )
+    _check_pigeonhole(band_bits, max_hamming)
 
     def _norm(df: DataFrame) -> DataFrame:
         return df.select("id", F.col("h_lo").alias("lo"), F.col("h_hi").alias("hi"))
@@ -1798,30 +1743,15 @@ def hamming_band_pairs_cross(
     rreps = rmem.groupBy("lo", "hi").agg(F.min("id").alias("id"))
     lb = _hamming_band_explode(lreps, band_bits)
     rb = _hamming_band_explode(rreps, band_bits)
-    if max_band_df is not None:
-        hot = (
-            lb.select("bkey", "lo", "hi").unionByName(rb.select("bkey", "lo", "hi"))
-            .distinct()
-            .groupBy("bkey")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_band_df)
-            .select("bkey")
-        )
-        lb = lb.join(F.broadcast(hot), "bkey", "left_anti")
-        rb = rb.join(F.broadcast(hot), "bkey", "left_anti")
-    a = lb.select(
-        F.col("id").alias("rid_a"), F.col("lo").alias("lo_a"), F.col("hi").alias("hi_a"), "bkey"
-    )
-    b = rb.select(
-        F.col("id").alias("rid_b"), F.col("lo").alias("lo_b"), F.col("hi").alias("hi_b"), "bkey"
-    )
-    ham = F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b"))) + F.bit_count(
-        F.col("hi_a").bitwiseXOR(F.col("hi_b"))
-    )
+    census = lb.select("bkey", "lo", "hi").unionByName(rb.select("bkey", "lo", "hi")).distinct()
     rep_pairs = (
-        a.join(b, "bkey")
-        .filter(ham <= max_hamming)
-        .select("lo_a", "hi_a", "rid_b", "lo_b", "hi_b", ham.alias("hamming"))
+        _verified_rep_pairs(
+            _apply_max_band_df(lb, max_band_df, census),
+            _apply_max_band_df(rb, max_band_df, census),
+            max_hamming,
+            F.lit(True),  # every pair, replay self-matches included
+        )
+        .select("lo_a", "hi_a", "rid_b", "lo_b", "hi_b", "hamming")
         .distinct()
     )
     expanded = rep_pairs.join(
@@ -1836,7 +1766,9 @@ def hamming_band_pairs_cross(
     ).select("id_a", "id_b", "hamming")
 
 
-def _drop_hot_frame_hashes(fh: DataFrame, max_frame_df: int | None) -> DataFrame:
+def _drop_hot_frame_hashes(
+    fh: DataFrame, max_frame_df: int | None, census: DataFrame | None = None
+) -> DataFrame:
     """The CBVR stop-frame lever: drop frame hashes carried by more than
     ``max_frame_df`` distinct items before the vote join. Black frames,
     station idents, intro cards and test patterns are shared by
@@ -1845,16 +1777,34 @@ def _drop_hot_frame_hashes(fh: DataFrame, max_frame_df: int | None) -> DataFrame
     evidence anyway (sharing a black frame does not make two videos
     copies; the ≥min_shared vote already assumes shared DISTINCT
     content frames). Recall cost: only pairs whose shared-frame budget
-    depended on a stop frame."""
+    depended on a stop frame. Items are counted over ``census`` (default
+    ``fh`` itself), so a cross join caps a frame hot on either side."""
     if max_frame_df is None:
         return fh
     hot = (
-        fh.groupBy("h_lo", "h_hi")
+        (fh if census is None else census)
+        .groupBy("h_lo", "h_hi")
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") > max_frame_df)
         .select("h_lo", "h_hi")
     )
     return fh.join(F.broadcast(hot), ["h_lo", "h_hi"], "left_anti")
+
+
+def _vote_pairs(
+    lfh: DataFrame, rfh: DataFrame, min_shared: int, keep: Column
+) -> DataFrame:
+    """Frame-hash equi-join of two (id, h_lo, h_hi) tables, filtered by
+    ``keep``, voted: (id_a, id_b, shared_frames ≥ ``min_shared``)."""
+    a = lfh.select(F.col("id").alias("id_a"), "h_lo", "h_hi")
+    b = rfh.select(F.col("id").alias("id_b"), "h_lo", "h_hi")
+    return (
+        a.join(b, ["h_lo", "h_hi"])
+        .filter(keep)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("shared_frames"))
+        .filter(F.col("shared_frames") >= min_shared)
+    )
 
 
 def shared_hash_vote_pairs(
@@ -1876,15 +1826,7 @@ def shared_hash_vote_pairs(
     fh = _drop_hot_frame_hashes(
         frame_hashes.select("id", "h_lo", "h_hi").distinct(), max_frame_df
     )
-    a = fh.select(F.col("id").alias("id_a"), "h_lo", "h_hi")
-    b = fh.select(F.col("id").alias("id_b"), "h_lo", "h_hi")
-    return (
-        a.join(b, ["h_lo", "h_hi"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_frames"))
-        .filter(F.col("shared_frames") >= min_shared)
-    )
+    return _vote_pairs(fh, fh, min_shared, F.col("id_a") < F.col("id_b"))
 
 
 def shared_hash_vote_pairs_cross(
@@ -1904,21 +1846,10 @@ def shared_hash_vote_pairs_cross(
     both before the join."""
     lfh = left.select("id", "h_lo", "h_hi").distinct()
     rfh = right.select("id", "h_lo", "h_hi").distinct()
-    if max_frame_df is not None:
-        hot = (
-            lfh.select("h_lo", "h_hi").unionByName(rfh.select("h_lo", "h_hi"))
-            .groupBy("h_lo", "h_hi")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_frame_df)
-            .select("h_lo", "h_hi")
-        )
-        lfh = lfh.join(F.broadcast(hot), ["h_lo", "h_hi"], "left_anti")
-        rfh = rfh.join(F.broadcast(hot), ["h_lo", "h_hi"], "left_anti")
-    a = lfh.select(F.col("id").alias("id_a"), "h_lo", "h_hi")
-    b = rfh.select(F.col("id").alias("id_b"), "h_lo", "h_hi")
-    return (
-        a.join(b, ["h_lo", "h_hi"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_frames"))
-        .filter(F.col("shared_frames") >= min_shared)
+    census = lfh.select("h_lo", "h_hi").unionByName(rfh.select("h_lo", "h_hi"))
+    return _vote_pairs(
+        _drop_hot_frame_hashes(lfh, max_frame_df, census),
+        _drop_hot_frame_hashes(rfh, max_frame_df, census),
+        min_shared,
+        F.lit(True),  # every pair, replay self-matches included
     )

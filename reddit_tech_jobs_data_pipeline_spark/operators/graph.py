@@ -79,7 +79,8 @@ def iterative_shuffle_partitions(spark: SparkSession, rows: int | None = None):
     derivation is a full-data shuffle that belongs at session sizing —
     measured at sf1.0, deriving the 83.4M-edge co-supply list under a
     pinned 8 made bfs 2.5× slower), count it (one cheap probe of the
-    cached/checkpointed blocks), and pass ``rows``; the pin becomes
+    cached/checkpointed blocks, or an observed count on the checkpoint
+    job itself), and pass ``rows``; the pin becomes
     ``clamp(rows / 2M, 8, 2048)`` — 8 at test SF (the measured loop
     optimum), growing linearly once the iterated table is big enough
     that a fixed 8 would spill. Measured on the sf1.0 graph (SCALE.md):

@@ -898,7 +898,7 @@ def image_dedup_monochrome_flood(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence of the star-edge form is therefore checked against an
     independent engine on a real flood, not just in unit tests."""
     from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
-        cluster_near_dups_star,
+        cluster_near_dups,
         hamming_band_pairs,
     )
 
@@ -906,7 +906,7 @@ def image_dedup_monochrome_flood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint once — see image_phash_near_dup
     hashes = multimodal.image_ahash(_phash_blobs_mixed(docs)).localCheckpoint()
     pairs = hamming_band_pairs(hashes, band_bits=16, max_hamming=2, exact_pairs=False)
-    clusters = cluster_near_dups_star(pairs.select("id_a", "id_b"))
+    clusters = cluster_near_dups(pairs.select("id_a", "id_b"))
     sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
     dupes = clusters.filter(F.col("id") != F.col("cluster_id")).select("id")
     base = docs.select(F.col("doc_id").alias("id"))
@@ -1376,7 +1376,7 @@ def _image_survivors_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint once — see image_phash_near_dup
     hashes = multimodal.image_ahash(_phash_blobs(docs)).localCheckpoint()
     from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
-        cluster_near_dups_star,
+        cluster_near_dups,
         hamming_band_pairs,
     )
 
@@ -1384,7 +1384,7 @@ def _image_survivors_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # star-edge form keeps identical-hash floods (monochrome bulk) from
     # expanding to B² edges before the contraction even starts
     pairs = hamming_band_pairs(hashes, band_bits=16, max_hamming=2, exact_pairs=False)
-    clusters = cluster_near_dups_star(pairs.select("id_a", "id_b"))
+    clusters = cluster_near_dups(pairs.select("id_a", "id_b"))
     sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
     dupes = clusters.filter(F.col("id") != F.col("cluster_id")).select("id")
     base = docs.select(F.col("doc_id").alias("id"))

@@ -1576,7 +1576,7 @@ def combined_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("id") != F.col("mid"))
         .select(F.col("id").alias("id_a"), F.col("mid").alias("id_b"))
     )
-    return dedup_ops.cluster_near_dups_star(tpairs.unionByName(upairs))
+    return dedup_ops.cluster_near_dups(tpairs.unionByName(upairs))
 
 
 def _multimodal_combined_sql() -> str:
@@ -1710,7 +1710,7 @@ def multimodal_combined_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_hamming=2,
         exact_pairs=False,
     ).select("id_a", "id_b")
-    return dedup_ops.cluster_near_dups_star(
+    return dedup_ops.cluster_near_dups(
         tpairs.unionByName(ipairs).unionByName(apairs)
     )
 

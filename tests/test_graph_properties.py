@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -246,33 +247,42 @@ class TestStarCC:
             max_size=30,
         )
     )
-    def test_star_contraction_matches_label_propagation(self, spark, rows):
-        from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
-            cluster_near_dups,
-            cluster_near_dups_star,
-        )
-
-        rows = [(a, b) for a, b in rows if a != b]
-        if not rows:
-            return
+    def test_star_contraction_matches_union_find(self, spark, rows):
+        """Self-pairs included: an id seen only in (a, a) labels itself."""
         pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-        lp = {r.id: r.cluster_id for r in cluster_near_dups(pairs).collect()}
-        star = {r.id: r.cluster_id for r in cluster_near_dups_star(pairs).collect()}
-        assert star == lp
+        got = {r.id: r.cluster_id for r in cluster_near_dups(pairs).collect()}
+        assert got == py_components(rows)
 
     def test_long_chain_converges_in_few_rounds(self, spark):
         """A 64-node path has diameter 63 — label propagation needs ~63
         rounds; star contraction must finish well inside max_iter=10 and
         still label every node with the chain minimum."""
-        from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
-            cluster_near_dups_star,
-        )
-
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(63)], "id_a long, id_b long"
         )
-        out = {r.id: r.cluster_id for r in cluster_near_dups_star(pairs, max_iter=10).collect()}
+        out = {r.id: r.cluster_id for r in cluster_near_dups(pairs, max_iter=10).collect()}
         assert out == {i: 0 for i in range(64)}
+
+    def test_cap_without_convergence_fails_loudly(self, spark):
+        """Partial labels would silently split a component: a cap too low
+        for the 64-node chain raises instead; the default cap converges."""
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+        )
+        with pytest.raises(RuntimeError, match="max_iter=2"):
+            cluster_near_dups(pairs, max_iter=2)
+        out = {r.id: r.cluster_id for r in cluster_near_dups(pairs).collect()}
+        assert out == {i: 0 for i in range(64)}
+
+    def test_every_id_in_pairs_gets_a_row(self, spark):
+        for rows, want in [
+            ([(1, 1), (2, 3), (3, 3)], {1: 1, 2: 2, 3: 2}),
+            ([(5, 5)], {5: 5}),
+            ([], {}),
+        ]:
+            pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+            got = {r.id: r.cluster_id for r in cluster_near_dups(pairs).collect()}
+            assert got == want
 
 
 class TestKCore:

@@ -90,7 +90,7 @@ def test_star_mode_preserves_survivor_set_and_components(spark):
     invariant between the all-pairs and star-edge forms (random hashes
     with planted duplicate groups)."""
     from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
-        cluster_near_dups_star,
+        cluster_near_dups,
     )
 
     rng = random.Random(23)
@@ -114,10 +114,10 @@ def test_star_mode_preserves_survivor_set_and_components(spark):
     drop_star = {r.id_b for r in star.select("id_b").distinct().collect()}
     assert drop_full == drop_star
     cc_full = {
-        (r.id, r.cluster_id) for r in cluster_near_dups_star(full).collect()
+        (r.id, r.cluster_id) for r in cluster_near_dups(full).collect()
     }
     cc_star = {
-        (r.id, r.cluster_id) for r in cluster_near_dups_star(star).collect()
+        (r.id, r.cluster_id) for r in cluster_near_dups(star).collect()
     }
     assert cc_full == cc_star
 

@@ -262,6 +262,19 @@ class TestClusterNearDups:
         out = {r.id: r.cluster_id for r in dedup.cluster_near_dups(pairs).collect()}
         assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
+    def test_incremental_update_keeps_untouched_singletons(self, spark):
+        """Old labels fold in as (id, cluster_id) pairs: the new pair joins
+        two old components, and the singleton 7 keeps its own row."""
+        labels = spark.createDataFrame(
+            [(1, 1), (2, 1), (5, 5), (6, 5), (7, 7)], "id long, cluster_id long"
+        )
+        new = spark.createDataFrame([(6, 2), (8, 9)], "id_a long, id_b long")
+        out = {
+            r.id: r.cluster_id
+            for r in dedup.incremental_cluster_update(labels, new).collect()
+        }
+        assert out == {1: 1, 2: 1, 5: 1, 6: 1, 7: 7, 8: 8, 9: 8}
+
 
 class TestIvfAnn:
     def test_probe_restricted_to_cells(self, spark):
@@ -595,7 +608,7 @@ def test_multimodal_combined_clusters_audio_edge_is_load_bearing(spark):
     ).select("id_a", "id_b")
     no_audio = {
         r.id: r.cluster_id
-        for r in dedup_ops.cluster_near_dups_star(
+        for r in dedup_ops.cluster_near_dups(
             tpairs.unionByName(ipairs)
         ).collect()
     }
