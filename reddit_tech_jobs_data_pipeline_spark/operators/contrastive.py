@@ -20,10 +20,10 @@ verify, same candidates-then-verify discipline as the dedup family.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reddit_tech_jobs_data_pipeline_spark.operators.similarity import _dvec, cosine
+from reddit_tech_jobs_data_pipeline_spark.operators.similarity import _dvec, _topk, cosine
 
 __all__ = ["hard_negative_topk", "triplet_mining"]
 
@@ -73,20 +73,7 @@ def hard_negative_topk(
     hard negatives. Ranking is by 4-dp-rounded cosine with neighbor-id
     tiebreak (deterministic and oracle-comparable, same contract as
     brute_force_topk). Output: (query_id, neighbor_id, cosine, rank)."""
-    scored = _scored_pairs(corpus, queries, id_col, vec_col, label_col, False)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("__rn").cast("long").alias("rank"),
-        )
-    )
+    return _topk(_scored_pairs(corpus, queries, id_col, vec_col, label_col, False), k)
 
 
 def triplet_mining(

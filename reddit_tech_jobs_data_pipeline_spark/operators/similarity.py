@@ -55,6 +55,34 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The rank tail of every top-k here: per query, rank the
+    (query_id, neighbor_id, cosine) rows by cosine desc with a
+    neighbor_id tiebreak (a unique order, so the k-selection is
+    deterministic and oracle-comparable) and keep rank ≤ k."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select("query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank"))
+    )
+
+
+def _scores(c: DataFrame, q: DataFrame, key: str | None = None) -> DataFrame:
+    """(query_id, neighbor_id, cosine) candidate pairs: corpus rows ``c``
+    (neighbor_id, cvec) against the broadcast queries ``q`` (query_id,
+    qvec), equi-joined on ``key`` (a bucket, signature or cell) or,
+    without one, every pair; self-matches dropped, cosine rounded to 4
+    dp."""
+    if key is None:
+        pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    else:
+        pairs = c.join(F.broadcast(q), key).filter(F.col("neighbor_id") != F.col("query_id"))
+    return pairs.select(
+        "query_id", "neighbor_id", F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine")
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -72,20 +100,7 @@ def brute_force_topk(
         F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cvec")
     )
     q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qvec"))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank"))
-    )
+    return _topk(_scores(c, q), k)
 
 
 def brute_force_topk_arrow(
@@ -180,14 +195,7 @@ def brute_force_topk_arrow(
     partial = corpus.select(id_col, vec_col).mapInArrow(
         score, "query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    out = (
-        partial.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank"))
-    )
+    out = _topk(partial, k)
     # expose the broadcast handle so batch-looping callers can
     # unpersist(blocking=False) after materializing (see docstring)
     if broadcast_out is not None:
@@ -288,21 +296,7 @@ def bucketed_ann_topk(
         _dvec(F.col(vec_col)).alias("qvec"),
         F.explode(_probe_buckets(F.col(vec_col), nbits, probe_hamming)).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank"))
-    )
+    return _topk(_scores(c, q, "bucket"), k)
 
 
 def ivf_assign_cells(
@@ -381,26 +375,41 @@ def ivf_ann_topk(
     nprobe/num_cells of the data.
     """
     centroids = seeded_centroids(corpus, num_cells, id_col, vec_col)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("v"))
-    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("v"))
-    c_cells = ivf_assign_cells(fan_out(c), centroids, nprobe=1, id_col="neighbor_id")
-    q_cells = ivf_assign_cells(q, centroids, nprobe=nprobe, id_col="query_id")
-    scored = (
-        c_cells.withColumnRenamed("v", "cvec2")
-        .join(F.broadcast(q_cells.withColumnRenamed("v", "qvec2")), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec2"), F.col("cvec2")), 4).alias("cosine"),
-        )
-        .distinct()  # a neighbor can meet a query through several probed cells
+    return _ivf_topk(
+        _ivf_cells(corpus, centroids, id_col, vec_col),
+        _query_cells(queries, centroids, nprobe, id_col, vec_col),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank"))
+
+
+def _ivf_cells(
+    corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, v, cell_id): each corpus vector in its nearest cell
+    — the IVF index rows, scored inline or written partitioned."""
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("v"))
+    return ivf_assign_cells(fan_out(c), centroids, nprobe=1, id_col="neighbor_id")
+
+
+def _query_cells(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, v, cell_id): each query in its ``nprobe`` nearest cells."""
+    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("v"))
+    return ivf_assign_cells(q, centroids, nprobe=nprobe, id_col="query_id")
+
+
+def _ivf_topk(cells: DataFrame, q_cells: DataFrame, k: int) -> DataFrame:
+    """The IVF scoring body, inline and persisted: each query scores the
+    rows of the cells it probes. Distinct, because a neighbor can meet a
+    query through several probed cells."""
+    return _topk(
+        _scores(
+            cells.withColumnRenamed("v", "cvec"),
+            q_cells.withColumnRenamed("v", "qvec"),
+            "cell_id",
+        ).distinct(),
+        k,
     )
 
 
@@ -458,26 +467,10 @@ def ivf_trained_ann_topk(
         corpus, k=num_cells, dim=dim, iterations=train_iters,
         id_col=id_col, vec_col=vec_col,
     ).select(F.col("cid").alias("cell_id"), "cvec")
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("v"))
-    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("v"))
-    c_cells = ivf_assign_cells(fan_out(c), centroids, nprobe=1, id_col="neighbor_id")
-    q_cells = ivf_assign_cells(q, centroids, nprobe=nprobe, id_col="query_id")
-    scored = (
-        c_cells.withColumnRenamed("v", "cvec2")
-        .join(F.broadcast(q_cells.withColumnRenamed("v", "qvec2")), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec2"), F.col("cvec2")), 4).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank"))
+    return _ivf_topk(
+        _ivf_cells(corpus, centroids, id_col, vec_col),
+        _query_cells(queries, centroids, nprobe, id_col, vec_col),
+        k,
     )
 
 
@@ -517,16 +510,9 @@ def write_ivf_index(
     (one directory per cell). At 100 TB this is the one-time index
     build: a broadcast assignment pass + a partitioned write; every
     subsequent query workload reads nprobe/num_cells of the bytes."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("v")
+    _cluster_for_partitioned_write(
+        _ivf_cells(corpus, centroids, id_col, vec_col), "cell_id", path, "overwrite"
     )
-    assigned = ivf_assign_cells(fan_out(c), centroids, nprobe=1, id_col="neighbor_id")
-    # cluster by cell before the partitioned write: one file per cell
-    # per build instead of one per (task x cell) — guide §6 (the
-    # pre-write hash distribution), and the probe opens fewer fragments
-    _cluster_for_partitioned_write(assigned, "cell_id").write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(path)
 
 
 def append_ivf_index(
@@ -549,18 +535,17 @@ def append_ivf_index(
     the whole index per ingest day is the anti-pattern. Fragment buildup
     in hot cells is maintenance.compact_ivf_index's job (layout-
     preserving; compact_append_store refuses cell_id= layouts)."""
-    c = corpus_delta.select(
-        F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("v")
+    _cluster_for_partitioned_write(
+        _ivf_cells(corpus_delta, centroids, id_col, vec_col), "cell_id", path, "append"
     )
-    assigned = ivf_assign_cells(fan_out(c), centroids, nprobe=1, id_col="neighbor_id")
-    _cluster_for_partitioned_write(assigned, "cell_id").write.mode(
-        "append"
-    ).partitionBy("cell_id").parquet(path)
 
 
-def _cluster_for_partitioned_write(df: DataFrame, col: str):
-    """Hash-cluster ``df`` by the partition column with an EXPLICIT task
-    count (defaultParallelism) before a ``partitionBy(col)`` write.
+def _cluster_for_partitioned_write(df: DataFrame, col: str, path: str, mode: str) -> None:
+    """Write ``df`` to ``path`` partitioned by ``col`` (``mode``
+    overwrite for a build, append for a delta), hash-clustered by the
+    partition column with an EXPLICIT task count (defaultParallelism)
+    first: one file per partition value per write instead of one per
+    (task × value), so a probe opens fewer fragments.
 
     ``repartition(col)`` with no count is an advisory shuffle AQE's
     partition coalescing happily collapses — at index scale the shuffled
@@ -574,17 +559,19 @@ def _cluster_for_partitioned_write(df: DataFrame, col: str):
     exactly one task — the ≤1 file per non-empty bucket per write
     contract is untouched."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, F.col(col))
+    df.repartition(n, F.col(col)).write.mode(mode).partitionBy(col).parquet(path)
 
 
-def _books_geometry_from_rows(rows, dim: int, who: str) -> tuple[int, int]:
+def _books_geometry_from_rows(rows, dim: int | None, who: str) -> tuple[int, int]:
     """(m, sub_w) of a persisted codebook table, DERIVED from the books
     themselves — never trusted from the caller: a wrong ``dim`` would
     slice wrong subvectors and silently append garbage codes into a
     healthy index. ``dim`` is cross-checked against m×sub_w and the call
-    refuses on mismatch. Takes COLLECTED book rows so the geometry probe
-    shares the one bounded collect the frozen-books encode needs anyway
-    (books are m×ks rows — KBs at any corpus size)."""
+    refuses on mismatch (a probe has no dim and passes None; it checks
+    its codes table's width instead, _probe_book_parts). Takes COLLECTED
+    book rows so the geometry probe shares the one bounded collect the
+    frozen-books encode needs anyway (books are m×ks rows — KBs at any
+    corpus size)."""
     if not rows:
         raise ValueError(f"{who}: empty codebooks")
     widths = sorted({len(r.cvec) for r in rows})
@@ -614,20 +601,12 @@ def _books_geometry_from_rows(rows, dim: int, who: str) -> tuple[int, int]:
             f"{' …' if len(bad) > 5 else ''} — retrain or repair the books"
         )
     sub_w = widths[0]
-    if dim != m * sub_w:
+    if dim is not None and dim != m * sub_w:
         raise ValueError(
             f"{who}: dim={dim} inconsistent with persisted books "
             f"(m={m} subspaces × sub_w={sub_w} = {m * sub_w})"
         )
     return m, sub_w
-
-
-def _pq_books_geometry(books: DataFrame, dim: int, who: str) -> tuple[int, int]:
-    """DataFrame-input wrapper over _books_geometry_from_rows (kept for
-    callers that don't otherwise collect the books)."""
-    return _books_geometry_from_rows(
-        books.select("sub", "cvec").collect(), dim, who
-    )
 
 
 def _frozen_encode_exprs(
@@ -675,28 +654,32 @@ def _frozen_encode_exprs(
     return exprs
 
 
-def _validate_vec_width(df: DataFrame, vec_col: str, dim: int, who: str) -> None:
+def _validate_vec_width(df: DataFrame, vec_col: str, dim: int, who: str) -> bool:
     """Refuse delta vectors whose length doesn't match the index
     geometry — a short vector would slice to truncated subvectors and
     encode to wrong-but-plausible codes. One column-pruned min/max
-    aggregate over the delta (the daily batch, not the corpus)."""
+    aggregate over the delta (the daily batch, not the corpus), which
+    also sees an empty delta: returns False then, and the append writes
+    nothing."""
     row = df.agg(
         F.min(F.size(vec_col)).alias("lo"), F.max(F.size(vec_col)).alias("hi")
     ).collect()[0]
     if row.lo is None:
-        return  # empty delta: the append is a no-op
+        return False
     if row.lo != dim or row.hi != dim:
         raise ValueError(
             f"{who}: delta vector lengths [{row.lo}, {row.hi}] != index dim {dim}"
         )
+    return True
 
 
-def load_pq_books(spark, path: str, dim: int, who: str = "load_pq_books"):
+def load_pq_books(spark, path: str, dim: int | None, who: str = "load_pq_books"):
     """Read + collect the frozen codebooks once: (rows, cid_type, m,
-    sub_w). The model is KBs and immutable after the build, so a caller
-    ingesting MANY deltas in one run (the streaming foreachBatch loop)
-    should load once and pass the result to every append instead of
-    re-reading + re-collecting per micro-batch."""
+    sub_w), validated by _books_geometry_from_rows. The model is KBs and
+    immutable after the build, so a caller ingesting MANY deltas in one
+    run (the streaming foreachBatch loop) should load once and pass the
+    result to every append instead of re-reading + re-collecting per
+    micro-batch."""
     books = spark.read.parquet(f"{path}/books")
     cid_type = dict(books.dtypes)["cid"]
     rows = books.select("sub", "cid", "cvec").collect()
@@ -724,14 +707,15 @@ def append_pq_index(
     oracle). The encode is ONE map-only projection over the DELTA
     (codebooks collected once — KBs — and inlined as expressions,
     _frozen_encode_exprs), plus one column-pruned validation scan; no
-    joins, no shuffles."""
+    joins, no shuffles. An empty delta writes nothing."""
     rows, cid_type, m, sub_w = books_model or load_pq_books(
         spark, path, dim, "append_pq_index"
     )
     base = corpus_delta.select(
         F.col(id_col).alias("vec_id"), _dvec(F.col(vec_col)).alias("__v")
     )
-    _validate_vec_width(base, "__v", m * sub_w, "append_pq_index")
+    if not _validate_vec_width(base, "__v", m * sub_w, "append_pq_index"):
+        return
     base.select(
         "vec_id", *_frozen_encode_exprs("__v", rows, m, sub_w, cid_type)
     ).write.mode("append").parquet(f"{path}/codes")
@@ -754,40 +738,18 @@ def ivf_index_topk(
     ``num_cells`` (cell ids, not data), never corpus-sized. Scores and
     ranking replicate ivf_ann_topk exactly — parquet round-trips the
     doubles bit-identically — so the same oracle gates both."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("v")
-    )
-    q_cells = ivf_assign_cells(q, centroids, nprobe=nprobe, id_col="query_id")
-    probed = sorted(
-        r["cell_id"] for r in q_cells.select("cell_id").distinct().collect()
-    )
-    index = spark.read.parquet(index_path).filter(
-        F.col("cell_id").isin([int(c) for c in probed])
-    )
-    scored = (
-        index.withColumnRenamed("v", "cvec2")
-        .join(F.broadcast(q_cells.withColumnRenamed("v", "qvec2")), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec2"), F.col("cvec2")), 4).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("__rn").cast("long").alias("rank"),
-        )
-    )
+    q_cells = _query_cells(queries, centroids, nprobe, id_col, vec_col)
+    return _ivf_topk(_read_probed(spark, index_path, q_cells, "cell_id"), q_cells, k)
+
+
+def _read_probed(spark, path: str, probes: DataFrame, col: str) -> DataFrame:
+    """The persisted index at ``path`` read back in ONLY the partitions
+    the queries probe: the distinct ``col`` keys of ``probes`` are
+    collected (bounded by the partition count — keys, never data) and
+    the ``isin`` filter prunes at the directory level, so no byte of an
+    unprobed partition is scanned."""
+    keys = sorted(r[col] for r in probes.select(col).distinct().collect())
+    return spark.read.parquet(path).filter(F.col(col).isin(keys))
 
 
 # ---------------------------------------------------------------------------
@@ -893,24 +855,7 @@ def quantized_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qvec")
     )
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("__rn").cast("long").alias("rank"),
-        )
-    )
+    return _topk(_scores(c, q), k)
 
 
 def label_centroid_outliers(
@@ -1208,10 +1153,7 @@ def pq_topk(
     books = pq_train_books(corpus, m, ks, train_iters, dim, id_col, vec_col).localCheckpoint()
     codes = pq_encode_with_books(corpus, books, m, dim, id_col, vec_col).localCheckpoint()
     c = _pq_reconstruct(codes, books, m)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qvec")
-    )
-    return _pq_adc_rerank(c, q, corpus, k, rerank_n, id_col, vec_col)
+    return _pq_topk(c, queries, corpus, k, rerank_n, id_col, vec_col, "pq_topk")
 
 
 def _book_literal_parts(book_rows, m: int) -> list[Column]:
@@ -1247,52 +1189,52 @@ def _pq_reconstruct(codes: DataFrame, books: DataFrame, m: int) -> DataFrame:
     return codes.select(F.col("vec_id").alias("neighbor_id"), rvec.alias("cvec"))
 
 
-def _pq_adc_rerank(
+def _pq_topk(
     c: DataFrame,
-    q: DataFrame,
+    queries: DataFrame,
     corpus: DataFrame | None,
     k: int,
     rerank_n: int,
     id_col: str,
     vec_col: str,
+    who: str,
 ) -> DataFrame:
-    """Shared ADC shortlist + optional exact rerank tail: ``c`` is the
-    reconstructed corpus (neighbor_id, cvec), ``q`` the full-precision
-    queries (query_id, qvec). ``corpus`` (raw vectors) is only touched
-    when rerank_n > 0, and then only for the shortlist rows."""
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+    """PQ's ADC scoring of the reconstructed corpus ``c`` (neighbor_id,
+    cvec) against the full-precision queries, then the rerank tail."""
+    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qvec"))
+    return _rerank_topk(_scores(c, q), queries, corpus, k, rerank_n, id_col, vec_col, who)
+
+
+def _rerank_topk(
+    scored: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame | None,
+    k: int,
+    rerank_n: int,
+    id_col: str,
+    vec_col: str,
+    who: str,
+) -> DataFrame:
+    """The two-stage tail of the quantized top-ks (PQ, IVF-PQ inline and
+    persisted). ``scored`` holds the ADC (quantized) cosines; with
+    ``rerank_n`` ≤ 0 they rank directly. Otherwise each query keeps its
+    rerank_n-row ADC shortlist and only those rows are rescored exactly
+    against the raw ``corpus`` vectors, which is then required."""
+    if rerank_n <= 0:
+        return _topk(scored, k)
+    if corpus is None:
+        raise ValueError(f"{who}: rerank_n > 0 requires the raw corpus")
+    q = queries.select(F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qvec"))
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cvec2")
+    )
+    shortlist = _topk(scored, rerank_n).select("query_id", "neighbor_id")
+    exact = shortlist.join(cv, "neighbor_id").join(F.broadcast(q), "query_id").select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine"),
+        F.round(cosine(F.col("qvec"), F.col("cvec2")), 4).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    first_n = rerank_n if rerank_n > 0 else k
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= first_n)
-        .select("query_id", "neighbor_id", "cosine", "__rn")
-    )
-    if rerank_n > 0:
-        cv = corpus.select(
-            F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cvec2")
-        )
-        out = (
-            out.select("query_id", "neighbor_id")
-            .join(cv, "neighbor_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qvec"), F.col("cvec2")), 4).alias("cosine"),
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-        )
-    return out.select(
-        "query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank")
-    )
+    return _topk(exact, k)
 
 
 def write_pq_index(
@@ -1346,21 +1288,26 @@ def pq_index_topk(
     the identical stored doubles, so scores replicate pq_topk exactly
     and the same oracle gates both (the ivf_index_topk contract)."""
     codes = spark.read.parquet(f"{index_path}/codes")
-    # bounded collect: the model, never data (m×ks rows)
-    book_rows = spark.read.parquet(f"{index_path}/books").collect()
-    m = sum(1 for col in codes.columns if col.startswith("code_"))
-    if m == 0 or not book_rows:
-        raise ValueError(f"pq_index_topk: empty/corrupt index at {index_path}")
-    if rerank_n > 0 and corpus is None:
-        raise ValueError("pq_index_topk: rerank_n > 0 requires the raw corpus")
-    parts = _book_literal_parts(book_rows, m)
+    parts = _probe_book_parts(spark, index_path, codes, "pq_index_topk")
     c = codes.select(
         F.col("vec_id").alias("neighbor_id"), F.concat(*parts).alias("cvec")
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qvec")
-    )
-    return _pq_adc_rerank(c, q, corpus, k, rerank_n, id_col, vec_col)
+    return _pq_topk(c, queries, corpus, k, rerank_n, id_col, vec_col, "pq_index_topk")
+
+
+def _probe_book_parts(spark, index_path: str, codes: DataFrame, who: str) -> list[Column]:
+    """The codebook literals a probe reconstructs with, read through the
+    appends' validated path (load_pq_books: a bounded collect of the
+    model, never data), plus the one check a probe adds: the codes table
+    carries exactly one ``code_*`` column per subspace of the books."""
+    rows, _cid_type, m, _sub_w = load_pq_books(spark, index_path, None, who)
+    n_codes = sum(1 for col in codes.columns if col.startswith("code_"))
+    if n_codes != m:
+        raise ValueError(
+            f"{who}: codes table at {index_path} has {n_codes} code columns "
+            f"but the books have m={m} subspaces — the index is corrupt"
+        )
+    return _book_literal_parts(rows, m)
 
 
 def ivfpq_topk(
@@ -1414,14 +1361,7 @@ def ivfpq_topk(
     write_ivfpq_index path writes to parquet once; that remains the
     production form (this form re-trains per call by design)."""
     cents = seeded_centroids(corpus, num_cells, id_col, vec_col).localCheckpoint()
-    c = corpus.select(F.col(id_col).alias("vec_id"), _dvec(F.col(vec_col)).alias("v"))
-    assigned = ivf_assign_cells(fan_out(c), cents, nprobe=1, id_col="vec_id")
-    resid = assigned.join(F.broadcast(cents), "cell_id").select(
-        "vec_id",
-        "cell_id",
-        F.col("cvec").alias("coarse"),
-        F.zip_with("v", "cvec", lambda a, b: a - b).alias("r"),
-    ).localCheckpoint()
+    resid = _residuals(corpus, cents, id_col, vec_col).localCheckpoint()
     resid_emb = resid.select("vec_id", F.col("r").alias("embedding"))
     books = pq_train_books(resid_emb, m, ks, train_iters, dim).localCheckpoint()
     codes = pq_encode_with_books(resid_emb, books, m, dim).localCheckpoint()
@@ -1434,53 +1374,43 @@ def ivfpq_topk(
     ).select(
         "neighbor_id",
         "cell_id",
-        F.zip_with("coarse", "rrec", lambda a, b: a + b).alias("fullrec"),
+        F.zip_with("coarse", "rrec", lambda a, b: a + b).alias("cvec"),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("v")
+    q_cells = _query_cells(queries, cents, nprobe, id_col, vec_col)
+    return _ivfpq_topk(cand, q_cells, queries, corpus, k, rerank_n, id_col, vec_col, "ivfpq_topk")
+
+
+def _residuals(corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """IVF-PQ's residual step: each corpus vector assigned to its
+    nearest coarse cell, minus that cell's centroid — (vec_id, cell_id,
+    coarse, r), ``coarse`` being the centroid. A caller that
+    materializes the result drops the columns it does not use."""
+    c = corpus.select(F.col(id_col).alias("vec_id"), _dvec(F.col(vec_col)).alias("v"))
+    assigned = ivf_assign_cells(fan_out(c), cents, nprobe=1, id_col="vec_id")
+    return assigned.join(F.broadcast(cents), "cell_id").select(
+        "vec_id",
+        "cell_id",
+        F.col("cvec").alias("coarse"),
+        F.zip_with("v", "cvec", lambda a, b: a - b).alias("r"),
     )
-    q_cells = ivf_assign_cells(q, cents, nprobe=nprobe, id_col="query_id")
-    scored = (
-        cand.join(
-            F.broadcast(q_cells.withColumnRenamed("v", "qvec")), "cell_id"
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("fullrec")), 4).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    first_n = rerank_n if rerank_n > 0 else k
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= first_n)
-        .select("query_id", "neighbor_id", "cosine", "__rn")
-    )
-    if rerank_n > 0:
-        cv = corpus.select(
-            F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cvec2")
-        )
-        qq = q.withColumnRenamed("v", "qvec")
-        out = (
-            out.select("query_id", "neighbor_id")
-            .join(cv, "neighbor_id")
-            .join(F.broadcast(qq), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qvec"), F.col("cvec2")), 4).alias("cosine"),
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-        )
-    return out.select(
-        "query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank")
-    )
+
+
+def _ivfpq_topk(
+    cand: DataFrame,
+    q_cells: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame | None,
+    k: int,
+    rerank_n: int,
+    id_col: str,
+    vec_col: str,
+    who: str,
+) -> DataFrame:
+    """IVF-PQ's ADC scoring, inline and persisted: each query scores the
+    coarse + residual reconstructions (``cand``'s cvec) of the cells it
+    probes, then the rerank tail."""
+    scored = _scores(cand, q_cells.withColumnRenamed("v", "qvec"), "cell_id").distinct()
+    return _rerank_topk(scored, queries, corpus, k, rerank_n, id_col, vec_col, who)
 
 
 def write_ivfpq_index(
@@ -1513,21 +1443,20 @@ def write_ivfpq_index(
         if centroids is not None
         else seeded_centroids(corpus, num_cells, id_col, vec_col)
     ).localCheckpoint()
-    c = corpus.select(F.col(id_col).alias("vec_id"), _dvec(F.col(vec_col)).alias("v"))
-    assigned = ivf_assign_cells(fan_out(c), cents, nprobe=1, id_col="vec_id")
     # checkpoint: referenced by both the encode below and the final
     # cell_id join — lazy, the assignment pass would run twice
-    resid = assigned.join(F.broadcast(cents), "cell_id").select(
-        "vec_id", "cell_id", F.zip_with("v", "cvec", lambda a, b: a - b).alias("r")
-    ).localCheckpoint()
+    resid = _residuals(corpus, cents, id_col, vec_col).drop("coarse").localCheckpoint()
     resid_emb = resid.select("vec_id", F.col("r").alias("embedding"))
     books = pq_train_books(resid_emb, m, ks, train_iters, dim).localCheckpoint()
     codes = pq_encode_with_books(resid_emb, books, m, dim)
     cents.coalesce(1).write.mode("overwrite").parquet(f"{path}/cents")
     books.coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
     _cluster_for_partitioned_write(
-        codes.join(resid.select("vec_id", "cell_id"), "vec_id"), "cell_id"
-    ).write.mode("overwrite").partitionBy("cell_id").parquet(f"{path}/codes")
+        codes.join(resid.select("vec_id", "cell_id"), "vec_id"),
+        "cell_id",
+        f"{path}/codes",
+        "overwrite",
+    )
 
 
 def load_ivfpq_model(spark, path: str, dim: int, who: str = "load_ivfpq_model"):
@@ -1563,26 +1492,20 @@ def append_ivfpq_index(
     maintenance.compact_ivf_index's job (layout-preserving;
     compact_append_store refuses cell_id= dirs). ``model`` =
     load_ivfpq_model(...) skips the per-call model re-read when one run
-    appends many deltas."""
+    appends many deltas. An empty delta writes nothing."""
     cents, rows, cid_type, m, sub_w = model or load_ivfpq_model(
         spark, path, dim, "append_ivfpq_index"
     )
-    c = corpus_delta.select(
-        F.col(id_col).alias("vec_id"), _dvec(F.col(vec_col)).alias("v")
-    )
-    _validate_vec_width(c, "v", m * sub_w, "append_ivfpq_index")
-    assigned = ivf_assign_cells(fan_out(c), cents, nprobe=1, id_col="vec_id")
-    resid = assigned.join(F.broadcast(cents), "cell_id").select(
-        "vec_id", "cell_id", F.zip_with("v", "cvec", lambda a, b: a - b).alias("r")
-    )
+    v = corpus_delta.select(_dvec(F.col(vec_col)).alias("v"))
+    if not _validate_vec_width(v, "v", m * sub_w, "append_ivfpq_index"):
+        return
+    resid = _residuals(corpus_delta, cents, id_col, vec_col)
     _cluster_for_partitioned_write(
-        resid.select(
-            "vec_id",
-            "cell_id",
-            *_frozen_encode_exprs("r", rows, m, sub_w, cid_type),
-        ),
+        resid.select("vec_id", "cell_id", *_frozen_encode_exprs("r", rows, m, sub_w, cid_type)),
         "cell_id",
-    ).write.mode("append").partitionBy("cell_id").parquet(f"{path}/codes")
+        f"{path}/codes",
+        "append",
+    )
 
 
 def ivfpq_index_topk(
@@ -1606,26 +1529,14 @@ def ivfpq_index_topk(
     ``corpus`` when rerank_n > 0. Scores replicate ivfpq_topk exactly,
     so the same oracle gates both."""
     cents = spark.read.parquet(f"{index_path}/cents")
-    book_rows = spark.read.parquet(f"{index_path}/books").collect()
     cent_rows = sorted(
         ((int(r.cell_id), [float(x) for x in r.cvec]) for r in cents.collect())
     )
-    if not cent_rows or not book_rows:
+    if not cent_rows:
         raise ValueError(f"ivfpq_index_topk: empty/corrupt index at {index_path}")
-    if rerank_n > 0 and corpus is None:
-        raise ValueError("ivfpq_index_topk: rerank_n > 0 requires the raw corpus")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("v")
-    )
-    q_cells = ivf_assign_cells(q, cents, nprobe=nprobe, id_col="query_id")
-    probed = sorted(
-        r["cell_id"] for r in q_cells.select("cell_id").distinct().collect()
-    )
-    codes = spark.read.parquet(f"{index_path}/codes").filter(
-        F.col("cell_id").isin([int(c) for c in probed])
-    )
-    m = sum(1 for col in codes.columns if col.startswith("code_"))
-    parts = _book_literal_parts(book_rows, m)
+    q_cells = _query_cells(queries, cents, nprobe, id_col, vec_col)
+    codes = _read_probed(spark, f"{index_path}/codes", q_cells, "cell_id")
+    parts = _probe_book_parts(spark, index_path, codes, "ivfpq_index_topk")
     # coarse centroid lookup rides the plan too: dense cell_id→cvec table
     max_cell = cent_rows[-1][0]
     cent_map = dict(cent_rows)
@@ -1640,46 +1551,10 @@ def ivfpq_index_topk(
     cand = codes.select(
         F.col("vec_id").alias("neighbor_id"),
         "cell_id",
-        F.zip_with(coarse, F.concat(*parts), lambda a, b: a + b).alias("fullrec"),
+        F.zip_with(coarse, F.concat(*parts), lambda a, b: a + b).alias("cvec"),
     )
-    scored = (
-        cand.join(F.broadcast(q_cells.withColumnRenamed("v", "qvec")), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("fullrec")), 4).alias("cosine"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    first_n = rerank_n if rerank_n > 0 else k
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= first_n)
-        .select("query_id", "neighbor_id", "cosine", "__rn")
-    )
-    if rerank_n > 0:
-        cv = corpus.select(
-            F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cvec2")
-        )
-        qq = q.withColumnRenamed("v", "qvec")
-        out = (
-            out.select("query_id", "neighbor_id")
-            .join(cv, "neighbor_id")
-            .join(F.broadcast(qq), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("qvec"), F.col("cvec2")), 4).alias("cosine"),
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-        )
-    return out.select(
-        "query_id", "neighbor_id", "cosine", F.col("__rn").cast("long").alias("rank")
+    return _ivfpq_topk(
+        cand, q_cells, queries, corpus, k, rerank_n, id_col, vec_col, "ivfpq_index_topk"
     )
 
 
@@ -1837,28 +1712,7 @@ def srp_ann_topk(
     sig = _srp_sig_sql(vec_col, planes)
     c = _srp_rows(corpus, id_col, vec_col, "neighbor_id", "cvec", sig)
     q = _srp_rows(queries, id_col, vec_col, "query_id", "qvec", sig)
-    scored = (
-        c.join(F.broadcast(q), "sig")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("__rn").cast("long").alias("rank"),
-        )
-    )
+    return _topk(_scores(c, q, "sig"), k)
 
 
 def _srp_bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
@@ -1885,12 +1739,7 @@ def write_srp_index(
     freeze beyond the plane literals themselves; the build is one
     signature projection + a partitioned write, and a probe reads only
     the queries' bucket directories."""
-    _cluster_for_partitioned_write(
-        _srp_rows(
-            corpus, id_col, vec_col, "neighbor_id", "cvec", _srp_bucket_sql(vec_col, planes)
-        ),
-        "sig",
-    ).write.mode("overwrite").partitionBy("sig").parquet(path)
+    _write_srp_rows(corpus, planes, path, id_col, vec_col, "overwrite")
 
 
 def append_srp_index(
@@ -1908,12 +1757,15 @@ def append_srp_index(
     DELTA + a partitioned append; touched buckets gain a fragment,
     untouched buckets aren't rewritten (fragment buildup is
     maintenance.compact_ivf_index's job — same layout contract)."""
-    _cluster_for_partitioned_write(
-        _srp_rows(
-            corpus_delta, id_col, vec_col, "neighbor_id", "cvec", _srp_bucket_sql(vec_col, planes)
-        ),
-        "sig",
-    ).write.mode("append").partitionBy("sig").parquet(path)
+    _write_srp_rows(corpus_delta, planes, path, id_col, vec_col, "append")
+
+
+def _write_srp_rows(
+    df: DataFrame, planes: list[list[float]], path: str, id_col: str, vec_col: str, mode: str
+) -> None:
+    """(neighbor_id, cvec) rows written into their sig= bucket dirs."""
+    rows = _srp_rows(df, id_col, vec_col, "neighbor_id", "cvec", _srp_bucket_sql(vec_col, planes))
+    _cluster_for_partitioned_write(rows, "sig", path, mode)
 
 
 def srp_index_topk(
@@ -1935,27 +1787,4 @@ def srp_index_topk(
     q = _srp_rows(
         queries, id_col, vec_col, "query_id", "qvec", _srp_bucket_sql(vec_col, planes)
     )
-    probed = sorted(r["sig"] for r in q.select("sig").distinct().collect())
-    index = spark.read.parquet(index_path).filter(F.col("sig").isin(probed))
-    scored = (
-        index.join(F.broadcast(q), "sig")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 4).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("__rn").cast("long").alias("rank"),
-        )
-    )
+    return _topk(_scores(_read_probed(spark, index_path, q, "sig"), q, "sig"), k)

@@ -92,20 +92,31 @@ def stream_upsert_to_gold(
 ) -> None:
     """foreachBatch merge: each micro-batch last-writer-wins-upserted into
     the gold parquet by event_id — the streaming version of the
-    reference's ON CONFLICT loop (dags/dag.py:380-421)."""
+    reference's ON CONFLICT loop (dags/dag.py:380-421).
+
+    Each merge is written once. The first batch writes gold itself: there
+    is nothing to replace, and a crash inside that write leaves no gold,
+    or a gold dir holding only uncommitted task output, which the replay
+    reads as empty. Every later merge goes to the staging sibling and is
+    promoted over gold by delete + rename (maintenance._swap_dirs). A
+    crash before the delete leaves gold whole; one after it leaves a
+    committed staging dir, which the next batch's read_store promotes
+    before reading. The replayed batch then merges again, idempotently."""
+    from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
     from reddit_tech_jobs_data_pipeline_spark.operators.merge import merge_upsert
 
     events = read_events_stream(spark, sf_dir)
+    staging = maintenance._staging_path(gold_path)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
         # only a genuine first batch may find no gold (runner.read_store)
         old = runner.read_store(sp, gold_path, batch.schema)
-        merged = merge_upsert(
-            batch.limit(0) if old is None else old, batch, ["event_id"], "ts"
-        )
-        merged.write.mode("overwrite").parquet(gold_path + "_tmp")
-        sp.read.parquet(gold_path + "_tmp").write.mode("overwrite").parquet(gold_path)
+        if old is None:
+            merge_upsert(batch.limit(0), batch, ["event_id"], "ts").write.parquet(gold_path)
+            return
+        merge_upsert(old, batch, ["event_id"], "ts").write.mode("overwrite").parquet(staging)
+        maintenance._swap_dirs(sp, staging, gold_path)
 
     runner.drain(events, _merge, checkpoint, None)
 

@@ -13,15 +13,15 @@ books, stream-ingested ≡ one-shot encode of the union — the catalog
 gates the post-stream probe with the SAME unrolled oracle as the batch
 append (``_pq_sql(train_where=...)``).
 
-Idempotent-append discipline (runner.read_store / runner.drop_seen): a
-replayed batch's vectors already have codes, so the ingest left-anti
-joins the batch against the codes table's vec_ids (column-pruned id
-scan — m+1 small ints per row, never raw vectors) before encoding; only
-the first-batch missing-path read may fall back to an empty store, and
-an interrupted compaction swap is repaired first. Scheduled compaction
-(maintenance.run_store_maintenance) bounds the flat codes table's
-fragment growth to O(cadence); books are a single file and never
-compacted.
+Each micro-batch is runner.ingest_step: a replayed batch's vectors
+already have codes, so the batch is left-anti joined against the codes
+table's vec_ids (column-pruned id scan — m+1 small ints per row, never
+raw vectors) before encoding; only the first-batch missing-path read
+may fall back to an empty store, and an interrupted compaction swap is
+repaired first. A batch left empty by the skip writes nothing (the
+append's width check sees the empty delta). Scheduled compaction
+(maintenance.run_store_maintenance) bounds the codes table's fragment
+growth to O(cadence); books are a single file and never compacted.
 
 Training the books BEFORE the stream (rather than on "whatever batch
 happens to arrive first") is deliberate: it makes the result
@@ -38,44 +38,10 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from reddit_tech_jobs_data_pipeline_spark.operators import maintenance, similarity
+from reddit_tech_jobs_data_pipeline_spark.operators import similarity
 from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
 from reddit_tech_jobs_data_pipeline_spark.streaming import runner
-
-
-def _new_vectors(batch: DataFrame, codes_path: str, id_col: str) -> DataFrame:
-    """The batch minus vectors whose id already has a code (replay skip:
-    a column-pruned read of the codes table's vec_ids, typed like the
-    batch ids it was encoded from)."""
-    ids = T.StructType([T.StructField("vec_id", batch.schema[id_col].dataType)])
-    codes = runner.read_store(batch.sparkSession, codes_path, ids)
-    return runner.drop_seen(batch, codes, id_col, "vec_id")
-
-
-def ingest_batch_pq(
-    batch: DataFrame,
-    index_path: str,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    books_model=None,
-) -> None:
-    """Encode one micro-batch with the index's frozen books and append
-    its codes, idempotently: vectors whose id already has a code are
-    dropped (replay skip — a column-pruned anti-join on vec_id).
-    ``books_model`` (similarity.load_pq_books) lets a multi-batch run
-    load the frozen model once instead of re-reading it per batch; a
-    crash-replay in a fresh process simply reloads from disk — the
-    model is immutable after the build, so the encode is identical."""
-    new = _new_vectors(batch, f"{index_path}/codes", id_col)
-    if new.isEmpty():
-        return  # full replay: no empty fragment appended
-    similarity.append_pq_index(
-        batch.sparkSession, new, index_path, dim=dim, id_col=id_col,
-        vec_col=vec_col, books_model=books_model,
-    )
 
 
 def run_pq_ingest_batchlike(
@@ -112,18 +78,15 @@ def run_pq_ingest_batchlike(
     # frozen model loaded ONCE for the whole drain — per-batch reload
     # was a parquet read + collect inside every micro-batch
     books_model = similarity.load_pq_books(spark, index, dim, "stream_pq_ingest")
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        ingest_batch_pq(batch, index, dim=dim, books_model=books_model)
-        # flat codes table: the plain append-store compaction applies
-        maintenance.run_store_maintenance(
-            batch.sparkSession,
-            f"{index}/codes",
-            batch_id,
-            every_n_batches=maintenance_every,
-        )
-
-    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), "stream_pq_ingest")
+    step = runner.ingest_step(
+        f"{index}/codes",
+        "vec_id",
+        lambda new: similarity.append_pq_index(
+            new.sparkSession, new, index, dim=dim, books_model=books_model
+        ),
+        every_n_batches=maintenance_every,
+    )
+    runner.drain(stream, step, os.path.join(work, "ckpt"), "stream_pq_ingest")
 
     return similarity.pq_index_topk(
         spark,
@@ -133,29 +96,6 @@ def run_pq_ingest_batchlike(
         k=k,
         rerank_n=rerank_n,
     ).localCheckpoint()
-
-
-def ingest_batch_ivfpq(
-    batch: DataFrame,
-    index_path: str,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    model=None,
-) -> None:
-    """Assign + residual-encode one micro-batch with the index's frozen
-    coarse centroids AND residual codebooks, appending into the
-    cell_id= directories, idempotently (column-pruned anti-join on the
-    codes table's vec_ids — partition columns and m+1 small ints, never
-    raw vectors). ``model`` (similarity.load_ivfpq_model) lets a
-    multi-batch run load both frozen models once — see ingest_batch_pq."""
-    new = _new_vectors(batch, f"{index_path}/codes", id_col)
-    if new.isEmpty():
-        return
-    similarity.append_ivfpq_index(
-        batch.sparkSession, new, index_path, dim=dim, id_col=id_col,
-        vec_col=vec_col, model=model,
-    )
 
 
 def run_ivfpq_ingest_batchlike(
@@ -210,19 +150,17 @@ def run_ivfpq_ingest_batchlike(
     # both frozen models loaded ONCE for the whole drain (see the PQ
     # runner) — per-batch reload was 2 parquet reads + a collect each
     ivfpq_model = similarity.load_ivfpq_model(spark, index, dim, "stream_ivfpq_ingest")
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        ingest_batch_ivfpq(batch, index, dim=dim, model=ivfpq_model)
-        # the codes table is cell_id=-partitioned: maintenance keeps that
-        # layout, which the probe prunes on
-        maintenance.run_store_maintenance(
-            batch.sparkSession,
-            f"{index}/codes",
-            batch_id,
-            every_n_batches=maintenance_every,
-        )
-
-    runner.drain(stream, _ingest, os.path.join(work, "ckpt"), "stream_ivfpq_ingest")
+    # the codes table is cell_id=-partitioned: maintenance keeps that
+    # layout, which the probe prunes on
+    step = runner.ingest_step(
+        f"{index}/codes",
+        "vec_id",
+        lambda new: similarity.append_ivfpq_index(
+            new.sparkSession, new, index, dim=dim, model=ivfpq_model
+        ),
+        every_n_batches=maintenance_every,
+    )
+    runner.drain(stream, step, os.path.join(work, "ckpt"), "stream_ivfpq_ingest")
 
     return similarity.ivfpq_index_topk(
         spark,

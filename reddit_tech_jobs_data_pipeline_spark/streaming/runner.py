@@ -12,14 +12,16 @@ rather than in each store module:
   pinned stream shuffle-partition count;
 - ``read_store`` (operators/maintenance.py, re-exported here) is the
   missing-path contract every store reader shares;
-- ``drop_seen`` is the replay-skip anti-join.
+- ``drop_seen`` is the replay-skip anti-join;
+- ``ingest_step`` is the whole micro-batch of a frozen-model index
+  ingest (PQ, IVF-PQ, SRP): replay skip, append, scheduled compaction.
 
-Replay safety rests on the last two. foreachBatch is at-least-once (a
-failure after the append but before the checkpoint commit replays the
-batch), so each store skips rows it already holds, and ONLY a genuine
-first batch may see a missing store: any other read failure (permissions,
-corrupt footer, transient FS error) fails the batch rather than silently
-resetting the store's state.
+Replay safety rests on read_store and drop_seen. foreachBatch is
+at-least-once (a failure after the append but before the checkpoint
+commit replays the batch), so each store skips rows it already holds,
+and ONLY a genuine first batch may see a missing store: any other read
+failure (permissions, corrupt footer, transient FS error) fails the
+batch rather than silently resetting the store's state.
 """
 
 from __future__ import annotations
@@ -34,7 +36,9 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
 from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (  # noqa: F401
     read_store,
 )
@@ -198,3 +202,29 @@ def drop_seen(
         return batch
     seen = store.select(F.col(store_col).alias(batch_col))
     return batch.join(seen, batch_col, "left_anti")
+
+
+def ingest_step(
+    store_path: str,
+    store_id: str,
+    append: Callable[[DataFrame], None],
+    every_n_batches: int = 0,
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch body of a frozen-model index ingest (PQ, IVF-PQ,
+    SRP): drop the batch rows whose ``vec_id`` the store at
+    ``store_path`` already holds in ``store_id`` (a column-pruned read,
+    typed like the batch ids, so no inference job), hand the rest to the
+    kind's ``append``, then run the store's scheduled compaction
+    (maintenance.run_store_maintenance; ``every_n_batches`` ≤ 0 never
+    compacts). The model is frozen, so a replayed batch re-derives rows
+    the store already holds, and the skip makes it append none."""
+
+    def step(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        ids = T.StructType([T.StructField(store_id, batch.schema["vec_id"].dataType)])
+        append(drop_seen(batch, read_store(spark, store_path, ids), "vec_id", store_id))
+        maintenance.run_store_maintenance(
+            spark, store_path, batch_id, every_n_batches=every_n_batches
+        )
+
+    return step

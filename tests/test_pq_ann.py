@@ -4,6 +4,8 @@ and recall@k against the exact float path on real testdata."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from reddit_tech_jobs_data_pipeline_spark.operators import similarity
@@ -466,16 +468,67 @@ def test_books_geometry_rejects_gapped_subs_and_nonfinite_centroids():
         geom(nan, 4, "t")
 
 
+def test_probes_refuse_gapped_books(spark, tmp_path):
+    """A books table with a missing subspace must fail a probe with the
+    same ValueError the appends raise, not a bare KeyError from the
+    literal lookup, for both PQ and IVF-PQ."""
+    import shutil
+
+    import pytest
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 4)
+    pq = str(tmp_path / "pq")
+    similarity.write_pq_index(emb, pq, m=4, ks=8, train_iters=1, dim=64)
+    ivfpq = str(tmp_path / "ivfpq")
+    similarity.write_ivfpq_index(emb, ivfpq, num_cells=4, m=4, ks=8, train_iters=1, dim=64)
+    for path in (pq, ivfpq):
+        books = spark.read.parquet(f"{path}/books").filter(F.col("sub") != 1)
+        books.coalesce(1).write.parquet(f"{path}/books_gapped")
+        shutil.rmtree(f"{path}/books")
+        os.rename(f"{path}/books_gapped", f"{path}/books")
+    with pytest.raises(ValueError, match="not contiguous"):
+        similarity.pq_index_topk(spark, pq, queries, k=3)
+    with pytest.raises(ValueError, match="not contiguous"):
+        similarity.ivfpq_index_topk(spark, ivfpq, queries, k=3)
+
+
+def test_probe_refuses_codes_books_width_mismatch(spark, tmp_path):
+    """Books of m subspaces against a codes table with a different
+    number of code columns is a corrupt index, refused by the probe."""
+    import pytest
+
+    emb = load_table(spark, SF_DIR, "embeddings").limit(64)
+    path = str(tmp_path / "pq")
+    similarity.write_pq_index(emb, path, m=4, ks=8, train_iters=1, dim=64)
+    import shutil
+
+    spark.read.parquet(f"{path}/codes").drop("code_3").write.parquet(f"{path}/codes3")
+    shutil.rmtree(f"{path}/codes")
+    os.rename(f"{path}/codes3", f"{path}/codes")
+    with pytest.raises(ValueError, match="3 code columns but the books have m=4"):
+        similarity.pq_index_topk(spark, path, emb, k=3)
+
+
+def test_append_pq_index_empty_delta_writes_nothing(spark, tmp_path):
+    """An empty delta is a no-op: the codes directory listing is
+    unchanged (no empty part file is appended)."""
+    emb = load_table(spark, SF_DIR, "embeddings").limit(64)
+    path = str(tmp_path / "pq")
+    similarity.write_pq_index(emb, path, m=4, ks=8, train_iters=1, dim=64)
+    before = sorted(os.listdir(f"{path}/codes"))
+    similarity.append_pq_index(spark, emb.filter(F.col("vec_id") < 0), path, dim=64)
+    assert sorted(os.listdir(f"{path}/codes")) == before
+
+
 def test_pq_stream_ingest_idempotent_and_equals_batch_append(spark, tmp_path):
-    """ingest_batch_pq replay-skips ids already coded (a replayed batch
-    appends nothing), and the streamed index probe equals the batch
-    frozen-books append over the same slices — the frozen-MODEL
+    """The PQ ingest step replay-skips ids already coded (a replayed
+    batch appends nothing), and the streamed index probe equals the
+    batch frozen-books append over the same slices — the frozen-MODEL
     guarantee for a TRAINED quantizer, not just data-independent
     planes."""
     from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-    from reddit_tech_jobs_data_pipeline_spark.streaming.pq_ingest import (
-        ingest_batch_pq,
-    )
+    from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
     emb = load_table(spark, SF_DIR, "embeddings")
     hist = emb.filter(F.col("vec_id") % 4 == 0)
@@ -486,11 +539,18 @@ def test_pq_stream_ingest_idempotent_and_equals_batch_append(spark, tmp_path):
     books.coalesce(1).write.mode("overwrite").parquet(f"{streamed}/books")
     b1 = emb.filter(F.col("vec_id") % 2 == 0)
     b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    ingest_batch_pq(b1, streamed, dim=64)
+    step = runner.ingest_step(
+        f"{streamed}/codes",
+        "vec_id",
+        lambda new: similarity.append_pq_index(spark, new, streamed, dim=64),
+    )
+    step(b1, 0)
     n1 = spark.read.parquet(f"{streamed}/codes").count()
-    ingest_batch_pq(b1, streamed, dim=64)  # replay: must append nothing
+    files = sorted(os.listdir(f"{streamed}/codes"))
+    step(b1, 1)  # replay: must append nothing, not even an empty fragment
     assert spark.read.parquet(f"{streamed}/codes").count() == n1
-    ingest_batch_pq(b2, streamed, dim=64)
+    assert sorted(os.listdir(f"{streamed}/codes")) == files
+    step(b2, 2)
     assert spark.read.parquet(f"{streamed}/codes").count() == emb.count()
 
     batch = str(tmp_path / "pq_batch")
@@ -514,13 +574,12 @@ def test_pq_stream_ingest_idempotent_and_equals_batch_append(spark, tmp_path):
 
 
 def test_ivfpq_stream_ingest_idempotent_and_equals_batch_append(spark, tmp_path):
-    """ingest_batch_ivfpq replay-skips coded ids and the streamed index
-    probe equals the batch frozen-models append — IVF-PQ's two frozen
-    models (coarse quantizer + residual books) through the stream."""
+    """The IVF-PQ ingest step replay-skips coded ids and the streamed
+    index probe equals the batch frozen-models append — IVF-PQ's two
+    frozen models (coarse quantizer + residual books) through the
+    stream."""
     from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-    from reddit_tech_jobs_data_pipeline_spark.streaming.pq_ingest import (
-        ingest_batch_ivfpq,
-    )
+    from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = similarity.seeded_centroids(emb, 4)
@@ -538,11 +597,16 @@ def test_ivfpq_stream_ingest_idempotent_and_equals_batch_append(spark, tmp_path)
     _models(streamed)
     b1 = emb.filter(F.col("vec_id") % 2 == 0)
     b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    ingest_batch_ivfpq(b1, streamed, dim=64)
+    step = runner.ingest_step(
+        f"{streamed}/codes",
+        "vec_id",
+        lambda new: similarity.append_ivfpq_index(spark, new, streamed, dim=64),
+    )
+    step(b1, 0)
     n1 = spark.read.parquet(f"{streamed}/codes").count()
-    ingest_batch_ivfpq(b1, streamed, dim=64)  # replay
+    step(b1, 1)  # replay
     assert spark.read.parquet(f"{streamed}/codes").count() == n1
-    ingest_batch_ivfpq(b2, streamed, dim=64)
+    step(b2, 2)
     assert spark.read.parquet(f"{streamed}/codes").count() == emb.count()
 
     batch = str(tmp_path / "ivfpq_batch")

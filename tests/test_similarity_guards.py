@@ -234,23 +234,24 @@ def test_srp_bucket_key_survives_leading_zeros(spark, tmp_path):
 
 
 def test_srp_stream_ingest_idempotent_and_equals_build(spark, tmp_path):
-    """ingest_batch_srp replay-skips ids already in the store (calling
-    it twice with the same batch appends nothing new), and the streamed
-    index probe equals a one-shot build."""
-    from reddit_tech_jobs_data_pipeline_spark.streaming.srp_ingest import (
-        ingest_batch_srp,
-    )
+    """The SRP ingest step replay-skips ids already in the store
+    (calling it twice with the same batch appends nothing new), and the
+    streamed index probe equals a one-shot build."""
+    from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
     emb = testdata.load_table(spark, "/root/testdata/sf0.001", "embeddings")
     planes = similarity.srp_planes(8, 64)
     store = str(tmp_path / "srp_stream")
     b1 = emb.filter(F.col("vec_id") % 2 == 0)
     b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    ingest_batch_srp(b1, store, planes)
+    step = runner.ingest_step(
+        store, "neighbor_id", lambda new: similarity.append_srp_index(new, planes, store)
+    )
+    step(b1, 0)
     n1 = spark.read.parquet(store).count()
-    ingest_batch_srp(b1, store, planes)  # replay: must append nothing
+    step(b1, 1)  # replay: must append nothing
     assert spark.read.parquet(store).count() == n1
-    ingest_batch_srp(b2, store, planes)
+    step(b2, 2)
     assert spark.read.parquet(store).count() == emb.count()
 
     queries = emb.filter(F.col("vec_id") < 16)

@@ -452,15 +452,16 @@ def test_run_store_maintenance_keeps_sig_partitioned_layout(spark, tmp_path):
     from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import (
         run_store_maintenance,
     )
-    from reddit_tech_jobs_data_pipeline_spark.streaming.srp_ingest import (
-        ingest_batch_srp,
-    )
+    from reddit_tech_jobs_data_pipeline_spark.streaming import runner
 
     emb = load_table(spark, SF, "embeddings")
     planes = similarity.srp_planes(4, 64)
     store = str(tmp_path / "srp_store")
+    step = runner.ingest_step(
+        store, "neighbor_id", lambda new: similarity.append_srp_index(new, planes, store)
+    )
     for tag in range(3):
-        ingest_batch_srp(emb.filter(F.col("vec_id") % 3 == tag), store, planes)
+        step(emb.filter(F.col("vec_id") % 3 == tag), tag)
     before = _sig_layout(store)
     rows = sorted(
         tuple(r) for r in spark.read.parquet(store).select("neighbor_id", "sig").collect()

@@ -4,6 +4,7 @@ upsert, and the applyInPandasWithState custom sessionizer."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -74,6 +75,85 @@ class TestForeachBatchUpsert:
         n_events = load_table(spark, SF, "events").count()
         assert out.count() == n_events  # event_id unique -> all rows land
         assert out.select("event_id").distinct().count() == n_events
+        # one staged write per batch, promoted by rename: no copy of gold
+        # is left beside it
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["ckpt", "gold_events"]
+
+    def test_crash_in_swap_restart_equals_clean_run(self, spark, tmp_path, monkeypatch):
+        """Over an existing gold, a crash after the staged merge commits
+        (here: gold deleted, then the rename fails) fails the drain; the
+        restart promotes the committed staging dir, replays the batch,
+        and ends equal to a clean run."""
+        import pytest
+
+        from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
+
+        clean = str(tmp_path / "clean")
+        sev.stream_upsert_to_gold(spark, SF, clean, str(tmp_path / "ckpt_clean"))
+        want = sorted(tuple(r) for r in spark.read.parquet(clean).collect())
+
+        gold = str(tmp_path / "gold_events")
+        sev.stream_upsert_to_gold(spark, SF, gold, str(tmp_path / "ckpt_first"))
+        real = maintenance._replace_dir
+        calls = []
+
+        def crash_once(fs, src, dst):
+            calls.append(src.toString())
+            if len(calls) == 1:
+                if fs.exists(dst):
+                    fs.delete(dst, True)
+                raise IOError("simulated crash between delete and rename")
+            real(fs, src, dst)
+
+        monkeypatch.setattr(maintenance, "_replace_dir", crash_once)
+        # a second checkpoint replays the events over the existing gold
+        ckpt = str(tmp_path / "ckpt")
+        with pytest.raises(Exception):
+            sev.stream_upsert_to_gold(spark, SF, gold, ckpt)
+        assert not os.path.exists(gold)
+        sev.stream_upsert_to_gold(spark, SF, gold, ckpt)
+        assert len(calls) >= 2  # the restart went through the swap again
+        assert sorted(tuple(r) for r in spark.read.parquet(gold).collect()) == want
+        assert not os.path.exists(maintenance._staging_path(gold))
+
+    def test_crash_in_first_write_restart_equals_clean_run(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A driver killed inside the first batch's write (no gold yet)
+        leaves uncommitted task output in a dir without _SUCCESS. The
+        restart replays the batch over it and ends equal to a clean run,
+        with no staging dir left."""
+        import pytest
+        from pyspark.sql import DataFrameWriter
+
+        from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
+
+        clean = str(tmp_path / "clean")
+        sev.stream_upsert_to_gold(spark, SF, clean, str(tmp_path / "ckpt_clean"))
+        want = sorted(tuple(r) for r in spark.read.parquet(clean).collect())
+
+        real = DataFrameWriter.parquet
+        written = []
+
+        def killed_once(self, path, *a, **kw):
+            written.append(path)
+            if len(written) == 1:
+                attempt = os.path.join(path, "_temporary", "0", "_temporary", "attempt_0")
+                os.makedirs(attempt)
+                with open(os.path.join(attempt, "part-00000.snappy.parquet"), "wb") as f:
+                    f.write(b"partial")
+                raise RuntimeError("simulated driver kill inside the write")
+            return real(self, path, *a, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", killed_once)
+        gold = str(tmp_path / "gold_events")
+        ckpt = str(tmp_path / "ckpt")
+        with pytest.raises(Exception):
+            sev.stream_upsert_to_gold(spark, SF, gold, ckpt)
+        sev.stream_upsert_to_gold(spark, SF, gold, ckpt)
+        assert len(written) >= 2  # the restart wrote again
+        assert sorted(tuple(r) for r in spark.read.parquet(gold).collect()) == want
+        assert not os.path.exists(maintenance._staging_path(gold))
 
     def test_unreadable_gold_fails_the_batch(self, spark, tmp_path):
         """Only a missing gold is a first batch. A gold dir that exists
