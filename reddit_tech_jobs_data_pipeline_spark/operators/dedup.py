@@ -1653,7 +1653,7 @@ def hamming_band_pairs(
     (expected Hamming ~32) almost never share a bucket; the verify is
     pure integer xor/bit_count, codegen'd, and runs BEFORE the distinct
     so the dedup shuffle carries only true near-dups. Hash extraction
-    (the mapInPandas decode) dominates end to end."""
+    (the mapInArrow decode) dominates end to end."""
     _check_pigeonhole(band_bits, max_hamming)
     members = hashes.select(
         F.col(id_col).alias("id"), F.col(lo_col).alias("lo"), F.col(hi_col).alias("hi")

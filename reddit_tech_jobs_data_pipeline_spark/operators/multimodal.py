@@ -1,10 +1,18 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata,
-processed with Arrow-batched ``mapInPandas``.
+"""Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-The Spark-side machinery here is real and tested — schema contract,
-partition-preserving batch iteration, UDF signatures, bounded batch
-sizes via ``spark.sql.execution.arrow.maxRecordsPerBatch``. Decoding
-comes in two tiers:
+Python runs here only where a codec runs. The two stand-in operators
+whose work Spark already has are plain Catalyst expressions:
+``decode_features`` (payload length, md5, md5-byte feature) and
+``frame_sample`` (frame-count fan-out, per-frame md5). The six codec
+operators (``decode_real_features``, ``resize_images``,
+``audio_energy_windows``, ``image_ahash``, ``audio_fingerprint``,
+``video_frame_hashes``) run their decoders through ``_map_rows``, the
+module's one Python boundary: a single ``mapInArrow`` pass over only the
+columns the codec reads. Nothing here sets
+``spark.sql.execution.arrow.maxRecordsPerBatch``; Spark's default
+(10,000 rows) sizes the Arrow batches.
+
+Decoding comes in two tiers:
 
 - ``real_decode`` / ``decode_real_features``: REAL pure-numpy decoders
   for the formats that need no codec library — binary PPM and 24-bit
@@ -18,17 +26,15 @@ comes in two tiers:
   feature so downstream plumbing stays exercised end-to-end.
 
 At 100 TB: binary columns ride in parquet alongside metadata, pruning
-and predicate pushdown still apply to the scalar columns, and the
-pandas stage is the only Python hop — one Arrow round-trip per batch,
-no per-row pickling.
+and predicate pushdown still apply to the scalar columns, and the codec
+pass is the only Python hop — one Arrow round-trip per batch, no
+per-row pickling.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -133,7 +139,7 @@ def decode_image(content: bytes):
         return rows[..., ::-1].copy()  # BGR -> RGB
     raise NotImplementedError(
         "compressed image codecs (JPEG/PNG/…) require an external library; "
-        "plug it in here — the mapInPandas plumbing is unchanged"
+        "plug it in here — the mapInArrow plumbing is unchanged"
     )
 
 
@@ -148,7 +154,7 @@ def decode_wav(content: bytes):
     if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
         raise NotImplementedError(
             "compressed audio codecs require an external library; "
-            "plug it in here — the mapInPandas plumbing is unchanged"
+            "plug it in here — the mapInArrow plumbing is unchanged"
         )
     pos, rate, channels, fmt = 12, None, None, None
     while pos + 8 <= len(content):
@@ -172,7 +178,7 @@ def real_decode(content: bytes, modality: str):
     libraries: uncompressed rasters (PPM/BMP) and PCM WAV, pure numpy.
     Video containers (and compressed image/audio codecs) still require
     ffmpeg/PIL-class libraries and raise NotImplementedError — swapping
-    them in touches only this function; the mapInPandas plumbing
+    them in touches only this function; the mapInArrow plumbing
     (schema, batching, partitioning) is identical either way."""
     if modality == "image":
         return decode_image(content)
@@ -180,36 +186,76 @@ def real_decode(content: bytes, modality: str):
         return decode_wav(content)
     raise NotImplementedError(
         "video frame decoding requires ffmpeg-class tooling; "
-        "plug it in here — the mapInPandas plumbing is unchanged"
+        "plug it in here — the mapInArrow plumbing is unchanged"
     )
 
 
-def _pseudo_feature(content: bytes, dim: int = 4) -> list[float]:
-    """Deterministic stand-in feature: bytes of md5(content) scaled to
-    [0,1] — stable across runs/engines, shaped like a real embedding."""
-    h = hashlib.md5(content or b"").digest()
-    return [b / 255.0 for b in h[:dim]]
+# a payload no native decoder handles raises one of these: the row is
+# dropped or quarantined, never the task. Anything else fails the task.
+_DECODE_ERRORS = (NotImplementedError, ValueError, IndexError, EOFError)
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: tuple[str, ...],
+    fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType,
+    on_error: Callable[[tuple, Exception], tuple] | None = None,
+) -> DataFrame:
+    """The module's one Python boundary: one ``mapInArrow`` pass that
+    calls ``fn(*row)`` on the ``cols`` of every row, each tuple it
+    yields one output row of ``schema``. Only ``cols`` cross to Python.
+    A row's outputs are all-or-nothing: if ``fn`` raises a decode error,
+    whatever it yielded is discarded and the row is dropped, or
+    replaced by ``on_error(row, exc)`` (the quarantine channel)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def _batches(batches):
+        for batch in batches:
+            out = []
+            for row in zip(*(batch.column(c).to_pylist() for c in cols)):
+                try:
+                    rows = list(fn(*row))
+                except _DECODE_ERRORS as e:
+                    rows = [] if on_error is None else [on_error(row, e)]
+                out.extend(rows)
+            columns = list(zip(*out)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.select(*cols).mapInArrow(_batches, schema)
 
 
 def decode_features(blobs: DataFrame, dim: int = 4) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            content = pdf["content"]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": content.map(lambda b: len(b) if b is not None else 0).astype("int32"),
-                    "content_md5": content.map(
-                        lambda b: hashlib.md5(b or b"").hexdigest()
-                    ),
-                    "feature": content.map(lambda b, d=dim: _pseudo_feature(b, d)),
-                }
-            )
-
-    return blobs.mapInPandas(_batches, schema=FEATURE_SCHEMA)
+    """Deterministic stand-in feature extraction over the binary column,
+    in Catalyst expressions only: payload byte length, md5 hex, and the
+    first ``min(dim, 16)`` md5 bytes scaled to [0,1] — stable across
+    runs/engines, shaped like a real embedding. A NULL payload reads as
+    empty."""
+    if dim < 0:
+        raise ValueError(f"dim must be >= 0, got {dim}")
+    md5 = F.md5(F.coalesce("content", F.lit(b"")))
+    exprs = [
+        F.col("id"),
+        F.col("modality"),
+        F.coalesce(F.length("content"), F.lit(0)),
+        md5,
+        # array() of no columns is array<void>; the cast below types it
+        F.array(
+            *[
+                F.conv(F.substring(md5, 2 * j + 1, 2), 16, 10).cast("double") / 255.0
+                for j in range(min(dim, 16))
+            ]
+        ),
+    ]
+    return blobs.select(
+        *[e.cast(f.dataType).alias(f.name) for e, f in zip(exprs, FEATURE_SCHEMA)]
+    )
 
 
 REAL_FEATURE_SCHEMA = T.StructType(
@@ -236,36 +282,24 @@ def decode_real_features(blobs: DataFrame) -> DataFrame:
     import numpy as np
 
     def _one(_id, mod, content):
-        try:
-            decoded = real_decode(bytes(content or b""), mod)
-            if mod == "image":
-                img = decoded
-                feat = [float(img[..., c].mean()) for c in range(img.shape[2])]
-                return (_id, mod, True, None, [int(d) for d in img.shape], feat)
+        decoded = real_decode(content or b"", mod)
+        if mod == "image":
+            shape = decoded.shape
+            feat = [float(decoded[..., c].mean()) for c in range(shape[2])]
+        else:
             rate, samples = decoded
+            shape = samples.shape
             rms = float(np.sqrt(np.mean(samples.astype("float64") ** 2)))
-            return (
-                _id,
-                mod,
-                True,
-                None,
-                [int(d) for d in samples.shape],
-                [float(rate), rms],
-            )
-        except (NotImplementedError, ValueError, IndexError, EOFError) as e:
-            return (_id, mod, False, str(e), None, None)
+            feat = [float(rate), rms]
+        yield (_id, mod, True, None, [int(d) for d in shape], feat)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                _one(_id, mod, content)
-                for _id, mod, content in zip(pdf["id"], pdf["modality"], pdf["content"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=["id", "modality", "decode_ok", "error", "shape", "feature"]
-            )
-
-    return blobs.mapInPandas(_batches, schema=REAL_FEATURE_SCHEMA)
+    return _map_rows(
+        blobs,
+        ("id", "modality", "content"),
+        _one,
+        REAL_FEATURE_SCHEMA,
+        on_error=lambda row, e: (row[0], row[1], False, str(e), None, None),
+    )
 
 
 def resize_nn(raster, out_h: int, out_w: int):
@@ -301,27 +335,17 @@ def resize_images(blobs: DataFrame, out_h: int, out_w: int) -> DataFrame:
     never crossing a shuffle)."""
 
     def _one(_id, content):
-        try:
-            img = decode_image(bytes(content or b""))
-            out = resize_nn(img, out_h, out_w)
-            return (
-                _id,
-                True,
-                None,
-                [int(d) for d in out.shape],
-                [int(v) for v in out.reshape(-1)],
-            )
-        except (NotImplementedError, ValueError, IndexError, EOFError) as e:
-            return (_id, False, str(e), None, None)
+        out = resize_nn(decode_image(content or b""), out_h, out_w)
+        pixels = [int(v) for v in out.reshape(-1)]
+        yield (_id, True, None, [int(d) for d in out.shape], pixels)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [_one(_id, content) for _id, content in zip(pdf["id"], pdf["content"])]
-            yield pd.DataFrame(
-                rows, columns=["id", "decode_ok", "error", "shape", "pixels"]
-            )
-
-    return blobs.select("id", "content").mapInPandas(_batches, schema=RESIZE_SCHEMA)
+    return _map_rows(
+        blobs,
+        ("id", "content"),
+        _one,
+        RESIZE_SCHEMA,
+        on_error=lambda row, e: (row[0], False, str(e), None, None),
+    )
 
 
 FRAME_SCHEMA = T.StructType(
@@ -334,52 +358,44 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def _n_frames(modality: str, n_bytes: int) -> int:
-    # deterministic stand-in for codec-reported frame/window counts:
-    # videos sample 1-4 frames by payload size, audio gets 2 windows,
-    # images are single-frame
-    if modality == "video":
-        return 1 + n_bytes % 4
-    if modality == "audio":
-        return 2
-    return 1
-
-
 def frame_sample(blobs: DataFrame) -> DataFrame:
     """1 blob → N frame rows (the fan-out shape of video frame sampling
-    / audio windowing), Arrow-batched. The per-frame decode is stubbed
-    (md5 of payload + frame index — see real_decode); the 1→N row
-    production, schema contract, and batch iteration are the real
-    mapInPandas plumbing a codec would plug into.
+    / audio windowing), in Catalyst expressions only. The frame count
+    is a deterministic stand-in for a codec-reported one (videos sample
+    1-4 frames by payload size, audio gets 2 windows, everything else
+    is single-frame) and the per-frame decode is stubbed as
+    md5(payload || '#' || frame_idx) — see real_decode. A NULL payload
+    reads as empty.
 
     At 100 TB the fan-out multiplies row counts ~4×, not byte counts
     (frames here are references, not materialized rasters) — repartition
     AFTER sampling if downstream per-frame work is heavy, so the
     explode doesn't concentrate hot videos on one task.
     """
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, mods, idxs, hashes = [], [], [], []
-            for _id, mod, content in zip(pdf["id"], pdf["modality"], pdf["content"]):
-                payload = content or b""
-                for i in range(_n_frames(mod, len(payload))):
-                    ids.append(_id)
-                    mods.append(mod)
-                    idxs.append(i)
-                    hashes.append(
-                        hashlib.md5(payload + b"#" + str(i).encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "modality": pd.Series(mods, dtype="object"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_md5": pd.Series(hashes, dtype="object"),
-                }
-            )
-
-    return blobs.mapInPandas(_batches, schema=FRAME_SCHEMA)
+    payload = F.coalesce("content", F.lit(b""))
+    n_frames = (
+        F.when(F.col("modality") == "video", 1 + F.length(payload) % 4)
+        .when(F.col("modality") == "audio", 2)
+        .otherwise(1)
+    )
+    frames = blobs.select(
+        "id",
+        "modality",
+        payload.alias("payload"),
+        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
+    )
+    frame_tag = F.encode(
+        F.concat(F.lit("#"), F.col("frame_idx").cast("string")), "UTF-8"
+    )
+    exprs = [
+        F.col("id"),
+        F.col("modality"),
+        F.col("frame_idx"),
+        F.md5(F.concat("payload", frame_tag)),
+    ]
+    return frames.select(
+        *[e.cast(f.dataType).alias(f.name) for e, f in zip(exprs, FRAME_SCHEMA)]
+    )
 
 
 AUDIO_WINDOW_SCHEMA = T.StructType(
@@ -404,33 +420,22 @@ def audio_energy_windows(
     row per (id, window) with its RMS and a silence flag. This is the
     shape voice-activity trimming and silence-stripping take in a
     training-data pipeline: decode + frame + feature ride ONE executor
-    pass (mapInPandas), samples never cross a shuffle, and the output is
+    pass (mapInArrow), samples never cross a shuffle, and the output is
     a narrow relational table any filter can consume. Undecodable
     payloads are dropped here (the quarantine-channel variant is
     decode_real_features; this operator is the post-quarantine hot
     path)."""
     import numpy as np
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"id": [], "window_i": [], "n_samples": [], "rms": [], "is_silence": []}
-            for _id, content in zip(pdf["id"], pdf["content"]):
-                try:
-                    _rate, samples = decode_wav(bytes(content or b""))
-                except (NotImplementedError, ValueError, IndexError, EOFError):
-                    continue
-                mono = samples.reshape(-1).astype("float64")
-                for w in range(len(mono) // frame):
-                    seg = mono[w * frame : (w + 1) * frame]
-                    rms = float(np.sqrt(np.mean(seg**2)))
-                    out["id"].append(_id)
-                    out["window_i"].append(w)
-                    out["n_samples"].append(frame)
-                    out["rms"].append(rms)
-                    out["is_silence"].append(rms < silence_rms)
-            yield pd.DataFrame(out)
+    def _windows(_id, content):
+        _rate, samples = decode_wav(content or b"")
+        mono = samples.reshape(-1).astype("float64")
+        for w in range(len(mono) // frame):
+            seg = mono[w * frame : (w + 1) * frame]
+            rms = float(np.sqrt(np.mean(seg**2)))
+            yield (_id, w, frame, rms, rms < silence_rms)
 
-    return blobs.mapInPandas(_batches, schema=AUDIO_WINDOW_SCHEMA)
+    return _map_rows(blobs, ("id", "content"), _windows, AUDIO_WINDOW_SCHEMA)
 
 
 _POW2_32 = None
@@ -451,6 +456,25 @@ def _pack_halves(bits) -> tuple[int, int]:
     lo = int(bits[:32] @ _POW2_32[: min(32, n)])
     hi = int(bits[32:] @ _POW2_32[: n - 32]) if n > 32 else 0
     return lo, hi
+
+
+def _check_64_bit_hash(hash_h: int, hash_w: int) -> None:
+    # the two-long packing holds exactly 64 bits
+    if hash_h < 1 or hash_h * hash_w != 64:
+        raise ValueError(
+            f"aHash needs hash_h x hash_w = 64 bits, got {hash_h}x{hash_w}"
+        )
+
+
+def _ahash(img, hash_h: int, hash_w: int) -> tuple[int, int]:
+    """aHash of one (H, W, 3) raster: nearest-neighbor resize to
+    hash_h×hash_w, integer grayscale (r+g+b)//3, bit i set iff
+    P·gray_i > Σgray, packed into two 32-bit longs."""
+    import numpy as np
+
+    gray = resize_nn(img, hash_h, hash_w).astype(np.int64).sum(axis=2) // 3
+    flat = gray.reshape(-1)
+    return _pack_halves((flat.size * flat > int(flat.sum())).astype(np.int64))
 
 
 AHASH_SCHEMA = T.StructType(
@@ -482,33 +506,14 @@ def image_ahash(blobs: DataFrame, hash_h: int = 8, hash_w: int = 8) -> DataFrame
     payloads are dropped (post-quarantine hot path — the error channel
     is decode_real_features).
 
-    100 TB: decode + resize + hash ride ONE mapInPandas executor pass;
+    100 TB: decode + resize + hash ride ONE mapInArrow executor pass;
     rasters never cross a shuffle; the output is 3 longs per image."""
-    import numpy as np
+    _check_64_bit_hash(hash_h, hash_w)
 
-    n_px = hash_h * hash_w
-    assert n_px == 64, "packing below assumes a 64-bit hash (8x8)"
+    def _one(_id, content):
+        yield (_id, *_ahash(decode_image(content or b""), hash_h, hash_w))
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"id": [], "h_lo": [], "h_hi": []}
-            for _id, content in zip(pdf["id"], pdf["content"]):
-                try:
-                    img = decode_image(bytes(content or b""))
-                except (NotImplementedError, ValueError, IndexError, EOFError):
-                    continue
-                small = resize_nn(img, hash_h, hash_w)
-                gray = small.astype(np.int64).sum(axis=2) // 3  # (r+g+b)//3
-                flat = gray.reshape(-1)
-                s = int(flat.sum())
-                bits = (n_px * flat > s).astype(np.int64)
-                lo, hi = _pack_halves(bits)
-                out["id"].append(_id)
-                out["h_lo"].append(lo)
-                out["h_hi"].append(hi)
-            yield pd.DataFrame(out)
-
-    return blobs.select("id", "content").mapInPandas(_batches, schema=AHASH_SCHEMA)
+    return _map_rows(blobs, ("id", "content"), _one, AHASH_SCHEMA)
 
 
 def audio_fingerprint(blobs: DataFrame, window: int = 2) -> DataFrame:
@@ -527,34 +532,24 @@ def audio_fingerprint(blobs: DataFrame, window: int = 2) -> DataFrame:
     Clips shorter than 64 frames are dropped (no comparable
     fingerprint); longer clips fingerprint their first 64 frames — the
     production variant fingerprints every offset window for
-    subsequence matching, same bits, more rows. One mapInPandas pass;
+    subsequence matching, same bits, more rows. One mapInArrow pass;
     samples never cross a shuffle — 3 longs per clip leave the
     executor."""
     import numpy as np
 
     n_frames = 64
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"id": [], "h_lo": [], "h_hi": []}
-            for _id, content in zip(pdf["id"], pdf["content"]):
-                try:
-                    _rate, samples = decode_wav(bytes(content or b""))
-                except (NotImplementedError, ValueError, IndexError, EOFError):
-                    continue
-                mono = samples.reshape(-1).astype(np.int64)
-                if len(mono) < n_frames * window:
-                    continue
-                seg = mono[: n_frames * window].reshape(n_frames, window)
-                e = (seg * seg).sum(axis=1)  # int64-exact
-                bits = (e[1:] > e[:-1]).astype(np.int64)  # 63 comparisons
-                lo, hi = _pack_halves(bits)
-                out["id"].append(_id)
-                out["h_lo"].append(lo)
-                out["h_hi"].append(hi)
-            yield pd.DataFrame(out)
+    def _one(_id, content):
+        _rate, samples = decode_wav(content or b"")
+        mono = samples.reshape(-1).astype(np.int64)
+        if len(mono) < n_frames * window:
+            return
+        seg = mono[: n_frames * window].reshape(n_frames, window)
+        e = (seg * seg).sum(axis=1)  # int64-exact
+        bits = (e[1:] > e[:-1]).astype(np.int64)  # 63 comparisons
+        yield (_id, *_pack_halves(bits))
 
-    return blobs.select("id", "content").mapInPandas(_batches, schema=AHASH_SCHEMA)
+    return _map_rows(blobs, ("id", "content"), _one, AHASH_SCHEMA)
 
 
 FRAME_HASH_SCHEMA = T.StructType(
@@ -593,38 +588,17 @@ def video_frame_hashes(blobs: DataFrame, hash_h: int = 8, hash_w: int = 8) -> Da
     decode_image contract). Compressed containers (MP4/WebM) require
     ffmpeg-class tooling; that integration point raises
     NotImplementedError inside decode_image and the payload is dropped
-    like any undecodable row. One mapInPandas pass; rasters never cross
-    a shuffle — (frame_idx, 2 longs) per frame leaves the executor."""
-    import numpy as np
+    like any undecodable row, as is a payload whose walk fails on any
+    frame. One mapInArrow pass; rasters never cross a shuffle —
+    (frame_idx, 2 longs) per frame leaves the executor."""
+    _check_64_bit_hash(hash_h, hash_w)
 
-    n_px = hash_h * hash_w
-    assert n_px == 64, "packing assumes a 64-bit hash (8x8)"
+    def _frames(_id, content):
+        raw = content or b""
+        pos, fi = 0, 0
+        while pos < len(raw):
+            ln = _p6_frame_bounds(raw, pos)
+            yield (_id, fi, *_ahash(decode_image(raw[pos : pos + ln]), hash_h, hash_w))
+            pos, fi = pos + ln, fi + 1
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"id": [], "frame_idx": [], "h_lo": [], "h_hi": []}
-            for _id, content in zip(pdf["id"], pdf["content"]):
-                try:
-                    raw = bytes(content or b"")
-                    frames = []
-                    pos = 0
-                    while pos < len(raw):
-                        ln = _p6_frame_bounds(raw, pos)
-                        frames.append(decode_image(raw[pos : pos + ln]))
-                        pos += ln
-                except (NotImplementedError, ValueError, IndexError, EOFError):
-                    continue
-                for fi, img in enumerate(frames):
-                    small = resize_nn(img, hash_h, hash_w)
-                    gray = small.astype(np.int64).sum(axis=2) // 3
-                    flat = gray.reshape(-1)
-                    s = int(flat.sum())
-                    bits = (n_px * flat > s).astype(np.int64)
-                    lo, hi = _pack_halves(bits)
-                    out["id"].append(_id)
-                    out["frame_idx"].append(fi)
-                    out["h_lo"].append(lo)
-                    out["h_hi"].append(hi)
-            yield pd.DataFrame(out)
-
-    return blobs.select("id", "content").mapInPandas(_batches, schema=FRAME_HASH_SCHEMA)
+    return _map_rows(blobs, ("id", "content"), _frames, FRAME_HASH_SCHEMA)

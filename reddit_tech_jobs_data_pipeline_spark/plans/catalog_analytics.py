@@ -317,7 +317,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: synthesize blobs from documents, extract
-    features via Arrow-batched mapInPandas (codec stubbed — see
+    the stand-in features as Catalyst expressions (codec stubbed — see
     operators/multimodal.py), compare the deterministic outputs."""
     docs = _t(spark, sf_dir, "documents")
     blobs = multimodal.synthesize_blobs(docs)
@@ -534,7 +534,7 @@ def audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-frame / audio-window fan-out (1 blob → N frame rows) via
-    Arrow-batched mapInPandas; the oracle replicates the deterministic
+    explode(sequence(...)); the oracle replicates the deterministic
     frame-count rule and per-frame hash with generate_series."""
     docs = _t(spark, sf_dir, "documents")
     blobs = multimodal.synthesize_blobs(docs)
@@ -740,13 +740,13 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel-order swap, a threshold off-by-one, or a band split error
     all break the hash match.
 
-    100 TB design: hashing is one mapInPandas pass (rasters never
+    100 TB design: hashing is one mapInArrow pass (rasters never
     shuffle — 3 longs per image leave the executor); candidates come
     only from the 65536-bucket band equi-join, so the pair volume is
     set by true near-dups (planted linear here), never N²."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     # fingerprint ONCE: the pair machinery references the hash table in
-    # several join branches, and an unmaterialized mapInPandas decode
+    # several join branches, and an unmaterialized Python-side decode
     # would re-run per branch (measured 1.99 -> 1.10 s at sf0.1)
     hashes = multimodal.image_ahash(_phash_blobs(docs)).localCheckpoint()
     from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
@@ -1001,7 +1001,7 @@ def video_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-based segmentation primitive (a hard cut moves most of the
     frame's luminance pattern, so consecutive-frame aHash Hamming jumps
     from ~0 within a shot to ~32 across a cut): walk + decode + aHash
-    every frame (multimodal.video_frame_hashes — one mapInPandas pass,
+    every frame (multimodal.video_frame_hashes — one mapInArrow pass,
     rasters never shuffle), then ONE lag window per video over the
     3-long frame rows and the integer cut test hamming > 10. The
     planted clips carry two 3-frame shots, so exactly frame 3 cuts per
@@ -1167,7 +1167,7 @@ def audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an endianness bug, a chunk-walk error, an energy overflow or a
     band split error all break the value hash.
 
-    100 TB design: one mapInPandas pass per clip (samples never cross
+    100 TB design: one mapInArrow pass per clip (samples never cross
     a shuffle; 3 longs leave the executor), candidates only from the
     65536-bucket band equi-join — the same shape as every other
     near-dup family."""
@@ -1438,7 +1438,7 @@ def _two_round_fp_ingest_sql(hx_ctes: str) -> str:
 )
 def streaming_image_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image dedup-AT-INGEST end to end through the real streaming
-    engine (streaming/image_ingest.py) — the image modality's
+    engine (streaming/fingerprint_ingest.py) — the image modality's
     streaming_incremental_dedup: the planted-family images arrive in
     two micro-batches (family members doc_id % 4 < 2, then the rest),
     each batch is decoded + aHashed once, deduped against the persisted
@@ -1452,11 +1452,18 @@ def streaming_image_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds in SQL over the same md5-derived hashes, so the streaming
     composition (mtime batch order, store append, dup routing) must
     preserve the batch operator's exact semantics to hash-match."""
-    from reddit_tech_jobs_data_pipeline_spark.streaming.image_ingest import (
-        run_image_dedup_ingest_batchlike,
+    from reddit_tech_jobs_data_pipeline_spark.streaming.fingerprint_ingest import (
+        ingest_batch_fingerprints,
+        run_two_batch_ingest_batchlike,
     )
 
-    return run_image_dedup_ingest_batchlike(spark, sf_dir)
+    return run_two_batch_ingest_batchlike(
+        spark,
+        _phash_blobs(_t(spark, sf_dir, "documents").select("doc_id")),
+        f"imgdedup_{stable_work_key(sf_dir)}",
+        multimodal.image_ahash,
+        ingest_batch_fingerprints,
+    )
 
 
 @register(
@@ -1480,10 +1487,17 @@ def streaming_audio_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     endianness bug, a batch-order break, or a dup-routing error all
     break the value hash."""
     from reddit_tech_jobs_data_pipeline_spark.streaming.fingerprint_ingest import (
-        run_audio_dedup_ingest_batchlike,
+        ingest_batch_fingerprints,
+        run_two_batch_ingest_batchlike,
     )
 
-    return run_audio_dedup_ingest_batchlike(spark, sf_dir)
+    return run_two_batch_ingest_batchlike(
+        spark,
+        _afp_blobs(_t(spark, sf_dir, "documents").select("doc_id")),
+        f"audiodedup_{stable_work_key(sf_dir)}",
+        multimodal.audio_fingerprint,
+        ingest_batch_fingerprints,
+    )
 
 
 def _vfh_two_round_sql() -> str:
@@ -1546,7 +1560,15 @@ def streaming_video_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     both rounds' votes in SQL over the same md5-derived frame
     hashes."""
     from reddit_tech_jobs_data_pipeline_spark.streaming.fingerprint_ingest import (
-        run_video_dedup_ingest_batchlike,
+        ingest_batch_frame_votes,
+        run_two_batch_ingest_batchlike,
     )
 
-    return run_video_dedup_ingest_batchlike(spark, sf_dir)
+    return run_two_batch_ingest_batchlike(
+        spark,
+        _vfh_blobs(_t(spark, sf_dir, "documents").select("doc_id")),
+        f"videodedup_{stable_work_key(sf_dir)}",
+        multimodal.video_frame_hashes,
+        ingest_batch_frame_votes,
+        distinct_ids=True,
+    )

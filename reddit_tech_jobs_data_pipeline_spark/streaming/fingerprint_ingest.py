@@ -1,8 +1,9 @@
 """Modality-agnostic streaming dedup-at-ingest over packed 64-bit
-fingerprints — the shared engine behind the image, audio, and video
-dedup-at-ingest paths (round 12 built it image-only; the audio/video
-fingerprints ride the identical (id, h_lo, h_hi) shape, so the store +
-band-join pattern generalizes verbatim — r12 verdict item 2).
+fingerprints — the one engine behind the image, audio, and video
+dedup-at-ingest catalog queries: all three fingerprints share the
+(id, h_lo, h_hi) shape, so one store + band-join loop
+(``run_two_batch_ingest_batchlike``) serves them, given the modality's
+fingerprint operator and dedup rule.
 
 The corpus of already-accepted items is represented ONLY by its
 fingerprint store (id + two longs per item for whole-item fingerprints;
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from reddit_tech_jobs_data_pipeline_spark.operators import maintenance, multimodal
+from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
 from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
     hamming_band_pairs,
     hamming_band_pairs_cross,
@@ -47,7 +48,6 @@ from reddit_tech_jobs_data_pipeline_spark.operators.dedup import (
     shared_hash_vote_pairs_cross,
 )
 from reddit_tech_jobs_data_pipeline_spark.streaming import runner
-from reddit_tech_jobs_data_pipeline_spark.workdirs import stable_work_key
 
 HASH_STORE_SCHEMA = T.StructType(
     [
@@ -134,17 +134,19 @@ def run_two_batch_ingest_batchlike(
     spark: SparkSession,
     blobs: DataFrame,
     work_name: str,
-    ingest_fn: Callable[[DataFrame, str], None],
-    maintenance_every: int = 2,
+    fingerprint: Callable[[DataFrame], DataFrame],
+    ingest: Callable[[DataFrame, str], None],
     distinct_ids: bool = False,
 ) -> DataFrame:
-    """Shared harness: split ``blobs`` (id, content) into two
+    """The one dedup-at-ingest run behind the image, audio and video
+    catalog queries: split ``blobs`` (id, content) into two
     deterministic micro-batches (family members id % 4 < 2, then the
     rest — mtime pinned so FileStreamSource's batch order is fixed), run
-    the real Structured Streaming loop (foreachBatch → ``ingest_fn(batch,
-    store_path)`` → cadenced store compaction), and return the final
-    store's ids — the accepted, deduplicated corpus. ``distinct_ids``
-    for per-frame stores where one id holds many rows."""
+    the real Structured Streaming loop (foreachBatch → ``fingerprint``
+    the batch once, materialized → ``ingest(fps, store_path)`` →
+    store compaction every second batch), and return the final store's ids — the
+    accepted, deduplicated corpus. ``distinct_ids`` for per-frame stores
+    where one id holds many rows."""
     work = runner.scratch_dir(work_name, work_name)
     store = os.path.join(work, "store")
     stream = runner.tag_stream(
@@ -157,9 +159,9 @@ def run_two_batch_ingest_batchlike(
     )
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        ingest_fn(batch, store)
+        ingest(fingerprint(batch).localCheckpoint(), store)
         maintenance.run_store_maintenance(
-            batch.sparkSession, store, batch_id, every_n_batches=maintenance_every
+            batch.sparkSession, store, batch_id, every_n_batches=2
         )
 
     runner.drain(stream, _ingest, os.path.join(work, "ckpt"), f"stream_{work_name}")
@@ -168,61 +170,3 @@ def run_two_batch_ingest_batchlike(
     if distinct_ids:
         out = out.distinct()
     return out.orderBy("id").localCheckpoint()
-
-
-def run_audio_dedup_ingest_batchlike(
-    spark: SparkSession, sf_dir: str, maintenance_every: int = 2
-) -> DataFrame:
-    """Audio dedup-at-ingest over the planted-family PCM16 clips
-    (catalog_analytics._afp_blobs): decode + energy-delta fingerprint
-    once per batch (multimodal.audio_fingerprint), whole-item Hamming
-    rules against the store, survivors append 3 longs per clip."""
-    from reddit_tech_jobs_data_pipeline_spark.plans.catalog_analytics import (
-        _afp_blobs,
-    )
-    from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def _ingest(batch: DataFrame, store_path: str) -> None:
-        ingest_batch_fingerprints(
-            multimodal.audio_fingerprint(batch).localCheckpoint(), store_path
-        )
-
-    return run_two_batch_ingest_batchlike(
-        spark,
-        _afp_blobs(docs),
-        f"audiodedup_{stable_work_key(sf_dir)}",
-        _ingest,
-        maintenance_every=maintenance_every,
-    )
-
-
-def run_video_dedup_ingest_batchlike(
-    spark: SparkSession, sf_dir: str, maintenance_every: int = 2
-) -> DataFrame:
-    """Video dedup-at-ingest over the planted-family 4-frame clips
-    (catalog_analytics._vfh_blobs): walk + decode + aHash every frame
-    once per batch (multimodal.video_frame_hashes), the ≥2-shared-frames
-    vote against the per-frame store, survivors append one row per
-    distinct frame hash."""
-    from reddit_tech_jobs_data_pipeline_spark.plans.catalog_analytics import (
-        _vfh_blobs,
-    )
-    from reddit_tech_jobs_data_pipeline_spark.sources.testdata import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def _ingest(batch: DataFrame, store_path: str) -> None:
-        ingest_batch_frame_votes(
-            multimodal.video_frame_hashes(batch).localCheckpoint(), store_path
-        )
-
-    return run_two_batch_ingest_batchlike(
-        spark,
-        _vfh_blobs(docs),
-        f"videodedup_{stable_work_key(sf_dir)}",
-        _ingest,
-        maintenance_every=maintenance_every,
-        distinct_ids=True,
-    )

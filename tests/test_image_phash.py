@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from reddit_tech_jobs_data_pipeline_spark.operators import multimodal
@@ -38,6 +39,18 @@ def test_image_ahash_matches_pure_python(spark):
     df = spark.createDataFrame(rows, "id long, content binary")
     got = {r.id: (r.h_lo, r.h_hi) for r in multimodal.image_ahash(df).collect()}
     assert got == {i: _py_ahash(g) for i, g in enumerate(grays)}
+
+
+@pytest.mark.parametrize("hash_h, hash_w", [(4, 4), (-8, -8), (8, 4)])
+def test_ahash_operators_refuse_non_64_bit_shape(spark, hash_h, hash_w):
+    """The two-long packing holds exactly 64 bits: any other hash shape
+    is refused with ValueError when the operator is called, before a
+    Spark job runs."""
+    df = spark.createDataFrame([(0, _ppm(bytes(range(64))))], "id long, content binary")
+    with pytest.raises(ValueError, match="64 bits"):
+        multimodal.image_ahash(df, hash_h, hash_w)
+    with pytest.raises(ValueError, match="64 bits"):
+        multimodal.video_frame_hashes(df, hash_h, hash_w)
 
 
 def test_image_ahash_drops_undecodable_payloads(spark):
@@ -275,9 +288,14 @@ def test_image_ingest_replay_skips_structurally(spark, tmp_path):
     from reddit_tech_jobs_data_pipeline_spark.plans.catalog_analytics import (
         _phash_blobs,
     )
-    from reddit_tech_jobs_data_pipeline_spark.streaming.image_ingest import (
-        ingest_batch_image_hashes,
+    from reddit_tech_jobs_data_pipeline_spark.streaming.fingerprint_ingest import (
+        ingest_batch_fingerprints,
     )
+
+    def _ingest(batch, store_path):
+        ingest_batch_fingerprints(
+            multimodal.image_ahash(batch).localCheckpoint(), store_path
+        )
 
     store = str(tmp_path / "img_store")
     docs = spark.range(32).select(F.col("id").alias("doc_id"))
@@ -285,12 +303,12 @@ def test_image_ingest_replay_skips_structurally(spark, tmp_path):
     b1 = blobs.filter(F.col("id") % 4 < 2)
     b2 = blobs.filter(F.col("id") % 4 >= 2)
 
-    ingest_batch_image_hashes(b1, store)
+    _ingest(b1, store)
     n1 = spark.read.parquet(store).count()
     assert 0 < n1 < b1.count()  # batch-internal family dups dropped
-    ingest_batch_image_hashes(b1, store)  # replay: structural skip
+    _ingest(b1, store)  # replay: structural skip
     assert spark.read.parquet(store).count() == n1
-    ingest_batch_image_hashes(b2, store)
+    _ingest(b2, store)
     n2 = spark.read.parquet(store).count()
     assert n1 <= n2 < n1 + b2.count()  # b2 mostly collides with store
     ids = {r.id for r in spark.read.parquet(store).select("id").collect()}

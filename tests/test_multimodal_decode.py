@@ -1,15 +1,21 @@
 """Real-decode tests: actual PPM/BMP/WAV payloads built byte-by-byte in
-the test, pushed through the distributed mapInPandas path, and checked
+the test, pushed through the distributed mapInArrow path, and checked
 against the known pixel/sample values. Undecodable payloads must come
-back quarantined (decode_ok=false), never raise."""
+back quarantined (decode_ok=false), never raise. The Catalyst stand-ins
+(decode_features, frame_sample) are pinned against hashlib, and a source
+scan keeps multimodal.py at one Python boundary."""
 
 from __future__ import annotations
 
+import hashlib
+import itertools
+import pathlib
 import struct
 
 import numpy as np
 import pytest
 
+from reddit_tech_jobs_data_pipeline_spark.operators import multimodal
 from reddit_tech_jobs_data_pipeline_spark.operators.multimodal import (
     decode_image,
     decode_real_features,
@@ -108,3 +114,81 @@ class TestDistributedRealDecode:
         for i in (4, 5, 6):  # compressed / video / empty -> quarantined
             assert not got[i].decode_ok and got[i].error
         assert "external library" in got[4].error
+
+
+# payload lengths 0..4 cover every video frame count (1 + len % 4); None
+# is a NULL payload, which both stand-ins read as empty
+NATIVE_ROWS = [
+    (i, mod, payload)
+    for i, (mod, payload) in enumerate(
+        itertools.product(
+            ("image", "audio", "video", "text"),
+            (None, b"", b"a", b"ab", b"\x00\xffz", b"\x80abc"),
+        )
+    )
+]
+PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _native_blobs(spark):
+    return spark.createDataFrame(
+        NATIVE_ROWS, "id long, modality string, content binary"
+    )
+
+
+def _assert_no_python_node(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+
+
+class TestCatalystStandIns:
+    @pytest.mark.parametrize("dim", [0, 4, 20])
+    def test_decode_features_matches_hashlib(self, spark, dim):
+        out = multimodal.decode_features(_native_blobs(spark), dim)
+        _assert_no_python_node(out)
+        assert out.schema["feature"].dataType.simpleString() == "array<double>"
+        want = {
+            i: (
+                mod,
+                len(payload or b""),
+                hashlib.md5(payload or b"").hexdigest(),
+                [b / 255.0 for b in hashlib.md5(payload or b"").digest()[:dim]],
+            )
+            for i, mod, payload in NATIVE_ROWS
+        }
+        got = {
+            r.id: (r.modality, r.n_bytes, r.content_md5, r.feature)
+            for r in out.collect()
+        }
+        assert got == want
+
+    def test_decode_features_refuses_negative_dim(self, spark):
+        with pytest.raises(ValueError, match="dim"):
+            multimodal.decode_features(_native_blobs(spark), -1)
+
+    def test_frame_sample_matches_hashlib(self, spark):
+        out = multimodal.frame_sample(_native_blobs(spark))
+        _assert_no_python_node(out)
+        want = []
+        for i, mod, payload in NATIVE_ROWS:
+            p = payload or b""
+            n = {"video": 1 + len(p) % 4, "audio": 2}.get(mod, 1)
+            want += [
+                (i, mod, f, hashlib.md5(p + b"#" + str(f).encode()).hexdigest())
+                for f in range(n)
+            ]
+        got = [(r.id, r.modality, r.frame_idx, r.frame_md5) for r in out.collect()]
+        assert sorted(got) == sorted(want)
+        video_ids = {i for i, mod, _ in NATIVE_ROWS if mod == "video"}
+        frames_per_video = {sum(1 for r in got if r[0] == i) for i in video_ids}
+        assert frames_per_video == {1, 2, 3, 4}
+
+
+def test_multimodal_has_one_python_boundary():
+    """Only multimodal._map_rows crosses to Python, and the decode-error
+    tuple is spelled out once — per-operator batch loops must not come
+    back."""
+    src = pathlib.Path(multimodal.__file__).read_text()
+    assert src.count("mapInArrow(") == 1
+    assert "mapInPandas(" not in src
+    assert src.count("(NotImplementedError, ValueError, IndexError, EOFError)") == 1
