@@ -46,12 +46,7 @@ def no_adaptive(spark: SparkSession):
     commutative scale modes) measured the OPPOSITE (combined_dedup
     _clusters 9-12 s with AQE vs 15.4 s without: the runtime
     broadcast-join conversion pays for the extra jobs) — so this is
-    opt-in per loop, not session config. ``SPARK_GRAFT_LOOP_AQE=on``
-    makes this a no-op — the measurement knob the interleaved keep-or-
-    revert A/Bs use (same affordance as SPARK_GRAFT_ITER_PARTITIONS)."""
-    if os.environ.get("SPARK_GRAFT_LOOP_AQE") == "on":
-        yield
-        return
+    opt-in per loop, not session config."""
     old = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -91,13 +86,10 @@ def iterative_shuffle_partitions(spark: SparkSession, rows: int | None = None):
     partition-invariance sweep uses it to prove results don't depend on
     this knob)."""
     env = os.environ.get("SPARK_GRAFT_ITER_PARTITIONS")
-    per_part = int(
-        os.environ.get("SPARK_GRAFT_ITER_ROWS_PER_PARTITION", ITER_ROWS_PER_PARTITION)
-    )
     if env is not None:
         n = env
     elif rows is not None:
-        n = str(max(8, min(2048, -(-rows // per_part))))
+        n = str(max(8, min(2048, -(-rows // ITER_ROWS_PER_PARTITION))))
     else:
         n = "8"
     old = spark.conf.get("spark.sql.shuffle.partitions")

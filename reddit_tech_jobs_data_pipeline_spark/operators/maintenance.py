@@ -24,7 +24,6 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -259,42 +258,21 @@ def swap_partitions(spark: SparkSession, staging: str, path: str) -> None:
     spark.catalog.refreshByPath(path)
 
 
-def _is_missing_path(e: Exception) -> bool:
-    """True iff the exception is the path-does-not-exist case (the only
-    failure a first batch legitimately produces)."""
-    cond = None
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:  # noqa: BLE001 — accessor shape varies by version
-                cond = None
-            if cond:
-                break
-    if cond is not None:
-        return "PATH_NOT_FOUND" in cond
-    return "Path does not exist" in str(e)
-
-
 def read_store(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame | None:
     """Read a persisted store or the gold table with ``schema`` (no
     inference job), after recover_interrupted_swap has repaired whatever
-    a crashed swap left. A missing path raises PATH_NOT_FOUND at the
-    read, even with a schema (tests/test_streaming_incremental_dedup.py
-    pins it); that alone means the table never existed, and gives None.
-    Any other failure re-raises: treating it as "no table" would reset a
+    a crashed swap left. A path that does not exist means the table never
+    existed and gives None, without attempting a read. Any failure to
+    read an existing path raises: treating it as "no table" would reset a
     store's state and append duplicates permanently, or overwrite gold
     with one batch."""
     recover_interrupted_swap(spark, path)
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if not _is_missing_path(e):
-            raise
-    return None
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    return spark.read.schema(schema).parquet(path)
 
 
 def compact_append_store(

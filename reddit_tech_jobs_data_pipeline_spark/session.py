@@ -39,13 +39,8 @@ def get_spark(app_name: str = "reddit_tech_jobs_data_pipeline_spark") -> SparkSe
         # fact tables still exceed this by orders of magnitude, so plans
         # stay correct.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # UI off by default (tests spawn many sessions); SPARK_GRAFT_UI=1
-        # turns it on for tools that read the status REST API
-        # (tools/shuffle_audit.py)
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") else "false",
-        )
+        # UI off (tests spawn many sessions)
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):

@@ -10,12 +10,15 @@ shipping a self-inconsistent doc.
 from __future__ import annotations
 
 import re
+import sys
 from pathlib import Path
 
 import reddit_tech_jobs_data_pipeline_spark.plans  # noqa: F401  (registers catalogs)
 from reddit_tech_jobs_data_pipeline_spark.plans.catalog import get_registry
 
-README = Path(__file__).resolve().parents[1] / "README.md"
+REPO = Path(__file__).resolve().parents[1]
+README = REPO / "README.md"
+SKILL = REPO / ".claude" / "skills" / "verify" / "SKILL.md"
 
 
 def test_readme_oracle_counts_match_registry():
@@ -45,3 +48,20 @@ def test_readme_oracle_counts_match_registry():
             f"latest Round status claims {m} oracle-gated queries; "
             f"registry has {n}"
         )
+
+
+def test_documented_tools_exist():
+    """Every ``tools/<name>.py`` the README or the verify skill tells a
+    reader to run is still in the tree."""
+    named = {m for doc in (README, SKILL) for m in re.findall(r"tools/(\w+)\.py", doc.read_text())}
+    assert named
+    assert sorted(n for n in named if not (REPO / "tools" / f"{n}.py").exists()) == []
+
+
+def test_no_tool_shadows_a_stdlib_module():
+    """A script's own directory leads ``sys.path``, so a ``tools/<name>.py``
+    named like a stdlib module is imported in its place by every other
+    tool (``profile.py`` broke ``import pyspark``, whose cProfile imports
+    ``profile``)."""
+    stems = {p.stem for p in (REPO / "tools").glob("*.py")}
+    assert sorted(stems & sys.stdlib_module_names) == []

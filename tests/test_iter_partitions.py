@@ -42,10 +42,3 @@ def test_env_override_beats_rows(spark):
     finally:
         del os.environ["SPARK_GRAFT_ITER_PARTITIONS"]
 
-
-def test_rows_per_partition_env_tunes_target(spark):
-    os.environ["SPARK_GRAFT_ITER_ROWS_PER_PARTITION"] = "1000"
-    try:
-        assert _pinned(spark, rows=20_000) == 20
-    finally:
-        del os.environ["SPARK_GRAFT_ITER_ROWS_PER_PARTITION"]

@@ -98,41 +98,6 @@ def test_corrupt_store_fails_batch_instead_of_resetting(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in str(exc_info.value)
 
 
-def test_missing_path_detection_is_narrow(spark):
-    """_is_missing_path: true only for the path-not-found condition."""
-    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import _is_missing_path
-    import pytest as _pytest
-
-    with _pytest.raises(Exception) as exc_info:
-        spark.read.parquet("/nonexistent/definitely/missing").collect()
-    assert _is_missing_path(exc_info.value)
-
-    class FakeExc(Exception):
-        def getCondition(self):
-            return "UNABLE_TO_FETCH_HIVE_TABLES"
-
-    assert not _is_missing_path(FakeExc("boom"))
-
-
-def test_schema_read_of_missing_store_raises_at_the_read(spark, tmp_path):
-    """Every streaming store reader relies on a schema'd parquet read of a
-    missing path raising PATH_NOT_FOUND AT THE READ (no action needed) —
-    that is what routes a first batch into read_store's None. If a
-    Spark upgrade defers the check, the missing-store case would surface
-    inside the append's plan instead; fail here first."""
-    from pyspark.errors import AnalysisException
-
-    from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import (
-        _sig_schema,
-    )
-    from reddit_tech_jobs_data_pipeline_spark.operators.maintenance import _is_missing_path
-    import pytest as _pytest
-
-    with _pytest.raises(AnalysisException) as exc_info:
-        spark.read.schema(_sig_schema(16)).parquet(str(tmp_path / "no_store"))
-    assert _is_missing_path(exc_info.value)
-
-
 def test_new_files_after_restart_are_ingested_incrementally(spark, tmp_path):
     src, store, ckpt = _run(spark, tmp_path)
     _write_docs(spark, src, [(1, DUP_TEXT), (3, UNIQUE_3)], "f1")

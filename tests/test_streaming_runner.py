@@ -1,9 +1,10 @@
 """streaming/runner.py: the store-read contract, the replay skip, and a
-guard that keeps the streaming skeleton in that one module (and the
-store-read failure handler in operators/maintenance.py)."""
+guard that keeps the streaming skeleton in that one module (and keeps
+every module from catching a store-read failure)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import pathlib
 import shutil
@@ -12,13 +13,11 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 
-from reddit_tech_jobs_data_pipeline_spark.operators import maintenance
 from reddit_tech_jobs_data_pipeline_spark.streaming import runner
+from reddit_tech_jobs_data_pipeline_spark.streaming.incremental_dedup import stream_dedup_ingest
 
 RUNNER = pathlib.Path(runner.__file__).resolve()
 PACKAGE = RUNNER.parents[1]
-# the store-read failure handler lives beside the swap recovery it runs
-HOME = {"except AnalysisException": pathlib.Path(maintenance.__file__).resolve()}
 SCHEMA = T.StructType([T.StructField("id", T.LongType())])
 
 
@@ -38,14 +37,53 @@ def test_read_store_repairs_interrupted_swap_then_reads(spark, tmp_path):
 
 
 def test_read_store_reraises_other_analysis_errors(spark, tmp_path):
-    """Only PATH_NOT_FOUND may become None; any other read failure of an
+    """Only a missing path may become None; a read failure of an
     existing store (here a schema the read rejects) raises."""
     store = str(tmp_path / "store")
     spark.range(3).write.parquet(store)
     dup = T.StructType([T.StructField("id", T.LongType())] * 2)
-    with pytest.raises(AnalysisException) as exc_info:
+    with pytest.raises(AnalysisException):
         runner.read_store(spark, store, dup)
-    assert not maintenance._is_missing_path(exc_info.value)
+
+
+@contextlib.contextmanager
+def _jvm_log(spark):
+    """Collect what the JVM logs (WARN and up, the session's level) while
+    the block runs, through a log4j2 appender on the root logger."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    writer = jvm.java.io.StringWriter()
+    appender = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(), None, writer, "test-capture", False, True
+    )
+    appender.start()
+    root = ctx.getConfiguration().getRootLogger()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    lines: list[str] = []
+    try:
+        yield lines
+    finally:
+        root.removeAppender("test-capture")
+        ctx.updateLoggers()
+        appender.stop()
+        lines.extend(writer.toString().splitlines())
+
+
+def test_store_first_batch_logs_no_missing_path(spark, tmp_path):
+    """A store's first micro-batch finds no store and must not try to
+    read it: a failed read logs Spark's FileNotFoundException warning and
+    a PATH_NOT_FOUND error from the query-execution listener bus."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    src, store = str(tmp_path / "docs"), str(tmp_path / "sig_store")
+    spark.createDataFrame([(1, "alpha beta gamma delta epsilon")], schema).write.parquet(src)
+    with _jvm_log(spark) as lines:
+        stream_dedup_ingest(spark, src, schema, store, str(tmp_path / "ckpt"))
+    assert spark.read.parquet(store).count() == 1
+    assert not [ln for ln in lines if "PATH_NOT_FOUND" in ln or "FileNotFoundException" in ln]
 
 
 def test_drop_seen_without_store_returns_batch(spark):
@@ -72,13 +110,12 @@ def test_scratch_dir_is_stable_and_wiped():
 @pytest.mark.parametrize("needle", ["writeStream", "foreachBatch(", "except AnalysisException"])
 def test_streaming_skeleton_lives_only_in_runner(needle):
     """No module outside streaming/runner.py may start a query or
-    register a batch callback, and none outside operators/maintenance.py
-    may catch a store-read failure itself — new runners go through
-    runner.drain / drain_to_memory / read_store."""
-    home = HOME.get(needle, RUNNER)
+    register a batch callback, and none may catch a store-read failure
+    — new runners go through runner.drain / drain_to_memory / read_store,
+    which lets every failure to read an existing store raise."""
     offenders = [
         str(p.relative_to(PACKAGE))
         for p in sorted(PACKAGE.rglob("*.py"))
-        if p != home and needle in p.read_text()
+        if p != RUNNER and needle in p.read_text()
     ]
     assert offenders == []

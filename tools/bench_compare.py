@@ -2,7 +2,7 @@
 shared-host noise band AND the sentinel-based contention flag (SCALE.md
 / memory: single samples off the band have twice been host contention,
 not regressions — A/B interleaved runs are the arbiter, see
-tools/scale_bench.py).
+``tools/profiler.py --ab``).
 
 Inputs can be driver BENCH_r{N}.json files (headline queries only) or
 BENCH_DETAIL.json files (headline + tail + sentinel series). When a
